@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -264,11 +265,11 @@ object VectorQueries extends QueryModule {
     // r7–r9 hash-red was a representable half at the 6th decimal
     // rounding differently across engines), so DuckDB mirrors the
     // whole 3-iteration training run bit-for-bit. 100 TB shape:
-    // each iteration is ONE broadcast-assign scan (K centroids ride
-    // the broadcast; the argmin is a native dot fold per pair via the
-    // norm identity) + ONE partial-aggregated shuffle keyed on
-    // (cell, pos) — K·dim keys, independent of corpus size; the
-    // trained 16-row model is staged once and both final consumers
+    // each iteration is ONE Spark job ([[lloydStep]]): every task
+    // assigns its rows through the K-centroid index it carries and
+    // sums them per cell in place, and the K·dim partial sums merge
+    // by tree reduce — independent of corpus size; the trained
+    // 16-row model is staged once and both final consumers
     // (assignment report, checksum join) read it.
     "q_kmeans" -> ((s, d) => kmeansReport(s, d, iters = 3)),
 
@@ -386,7 +387,7 @@ object VectorQueries extends QueryModule {
     // encode is a pure map over the corpus scan (CentroidIndex per
     // subspace, codegen'd, zero exchange).
     "q_ann_pq" -> ((s, d) => {
-      val books = trainPqBooks(s, d)
+      val books = trainPqBooks(s, embWithEu(s, d))
       val idxs = books.map(b => graft.functions.CentroidIndex.buildCached(b))
       def bookArr(m: Int) = typedlit((0L until pqK).map(c =>
         books(m).find(_._1 == c).map(_._2.toSeq).getOrElse(Seq.fill(pqSub)(0L))))
@@ -466,7 +467,7 @@ object VectorQueries extends QueryModule {
             (a, b) => a - b)))
       // Books train over the residual population (pooled across
       // cells — the standard IVF-PQ regime).
-      val books = trainPqBooksOn(s,
+      val books = trainPqBooks(s,
         assigned.select(col("vec_id"), col("r_u").as("e_u")))
       val idxs = books.map(b => graft.functions.CentroidIndex.buildCached(b))
       def bookArr(m: Int) = typedlit((0L until pqK).map(c =>
@@ -702,57 +703,24 @@ object VectorQueries extends QueryModule {
   private[graft] val pqIters = 2
   private[graft] val pqShort = 32
 
-  /** Train the pqM per-subspace codebooks — for each subspace, the
-    * SAME integer micro-unit Lloyd chain as [[trainCentroidsOn]]
-    * (seed = the first-pqK vectors' sub-slices, assignment through
-    * the pruned exact [[graft.functions.CentroidIndex]], per-cell
-    * half-away integer means), run over the sub-vector columns by
-    * renaming them into the shared assign/recompute machinery.
-    * Training scans the full corpus: with pqK fixed the per-iteration
-    * cost is pqK·n sub-dots — linear in the corpus at any scale.
-    * Returns per subspace the (cid, codeword_u, c2u) rows. */
-  private def trainPqBooks(s: SparkSession,
-      d: String): Seq[Seq[(Long, Array[Long], Long)]] =
-    trainPqBooksOn(s, embWithEu(s, d))
-
-  /** [[trainPqBooks]] over an explicit (vec_id, e_u) corpus — the
-    * residual-encoding variant trains over residual vectors. */
-  private def trainPqBooksOn(s: SparkSession,
-      corpus: DataFrame): Seq[Seq[(Long, Array[Long], Long)]] = {
-    import s.implicits._
-    import scala.concurrent.{Await, ExecutionContext, Future}
+  /** Train the pqM per-subspace codebooks over a (vec_id, e_u) corpus
+    * (IVF-PQ trains on residuals) — the SAME integer micro-unit Lloyd
+    * as [[trainCentroidsOn]]: seed = the first-pqK vectors' sub-slices,
+    * then one [[lloydStep]] job per iteration trains all pqM books,
+    * each on its own sub-slice. Training scans the full corpus: with
+    * pqK fixed the per-iteration cost is pqK·n sub-dots — linear in the
+    * corpus at any scale. Returns per subspace the (cid, codeword_u,
+    * c2u) rows. */
+  private[graft] def trainPqBooks(s: SparkSession,
+      corpus: DataFrame): Seq[Model] = {
     val e = StagedCache.persist(corpus.select(col("vec_id"), col("e_u")))
-    // The pqM book trainings are INDEPENDENT (disjoint sub-slices,
-    // private models) — submit them as concurrent driver threads so
-    // the 2·pqM tiny assign/recompute jobs overlap instead of
-    // queueing; each book's own chain stays strictly sequential, so
-    // results are bit-identical to the serial loop. Thread-pool
-    // bounded to pqM; Spark job submission is thread-safe by design.
-    implicit val ec: scala.concurrent.ExecutionContextExecutorService =
-      ExecutionContext.fromExecutorService(
-        java.util.concurrent.Executors.newFixedThreadPool(pqM))
-    val futures = (0 until pqM).map { m => Future {
-      val sub = StagedCache.persist(
-        e.select(col("vec_id"),
-            slice(col("e_u"), m * pqSub + 1, pqSub).as("e_u"))
-          .withColumn("n2u", VectorFunctions.dotLong(col("e_u"), col("e_u"))))
-      var model: Seq[(Long, Array[Long], Long)] =
-        sub.filter(col("vec_id") < pqK)
-          .select(col("vec_id"), col("e_u"), col("n2u"))
-          .as[(Long, Seq[Long], Long)].collect().toSeq.sortBy(_._1)
-          .map { case (cid, cu, c2) => (cid, cu.toArray, c2) }
-      for (_ <- 1 to pqIters) {
-        val index = graft.functions.CentroidIndex.build(model)
-        model = recomputeCentroids(assignMinIndexed(sub, index))
-          .select(col("cid"), col("c_u"), col("c2u"))
-          .as[(Long, Seq[Long], Long)].collect().toSeq.sortBy(_._1)
-          .map { case (cid, cu, c2) => (cid, cu.toArray, c2) }
-      }
-      model
-    } }
-    try Await.result(Future.sequence(futures),
-      scala.concurrent.duration.Duration(10, "min"))
-    finally ec.shutdown()
+    val seed = collectVecs(e.filter(col("vec_id") < pqK))
+    var books: Seq[Model] = (0 until pqM).map(m => seed.map { case (cid, eu) =>
+      val cu = eu.slice(m * pqSub, (m + 1) * pqSub)
+      (cid, cu, sqNorm(cu))
+    })
+    for (_ <- 1 to pqIters) books = lloydStep(e, books)
+    books
   }
 
   /** SemDeDup drop threshold + within-cell cap. τ matches
@@ -828,11 +796,6 @@ object VectorQueries extends QueryModule {
     * model-artifact size (29 k rows ≈ 15 MB at 1000× sf0.1). */
   private[graft] def assignMin(e: DataFrame, cent: DataFrame): DataFrame = {
     val index = graft.functions.CentroidIndex.buildCached(collectModel(cent))
-    assignMinIndexed(e, index)
-  }
-
-  private def assignMinIndexed(e: DataFrame,
-      index: graft.functions.CentroidIndex): DataFrame = {
     val payload = e.columns.filterNot(_ == "vec_id").toSeq
     e.withColumn("_nc",
         graft.functions.CentroidIndex.nearest(col("e_u"), col("n2u"), index))
@@ -840,31 +803,68 @@ object VectorQueries extends QueryModule {
         col("_nc.cid").as("cid")) ++ payload.map(col): _*)
   }
 
+  /** A trained model: (cid, c_u, c2u) rows, cid-sorted. */
+  private[graft] type Model = Seq[(Long, Array[Long], Long)]
+
   /** The trained model rows (cid, c_u, c2u), driver-side and cid-sorted. */
-  private def collectModel(cent: DataFrame): Seq[(Long, Array[Long], Long)] =
+  private def collectModel(cent: DataFrame): Model =
     cent.select(col("cid"), col("c_u"), col("c2u")).collect().toSeq
       .map(r => (r.getLong(0), r.getSeq[Long](1).toArray, r.getLong(2)))
       .sortBy(_._1)
 
-  /** Per-cell mean over an assignment — INTEGER micro-units end-to-end
-    * (sign-symmetric half-away division of the exact µ-unit component
-    * sum sq by n): no double is ever derived, so no representable-half
-    * rounding hazard exists at any step. One partial-aggregated
-    * shuffle keyed on (cell, pos) — K·dim keys, corpus-size-free. */
-  private def recomputeCentroids(assigned: DataFrame): DataFrame =
-    assigned.select(col("cid").as("cell0"),
-        posexplode(col("e_u")).as(Seq("pos", "v_u")))
-      .groupBy("cell0", "pos")
-      .agg(sum(col("v_u")).as("sq"), count(lit(1)).as("n"))
-      .withColumn("cvp_u", expr("CAST(CASE WHEN sq >= 0" +
-        " THEN (sq * 2 + n) DIV (2 * n)" +
-        " ELSE -((-sq * 2 + n) DIV (2 * n)) END AS BIGINT)"))
-      .groupBy("cell0")
-      .agg(transform(array_sort(collect_list(struct(col("pos"), col("cvp_u")))),
-          x => x.getField("cvp_u")).as("c_u"),
-        sum(col("cvp_u")).as("csum"))
-      .select(col("cell0").as("cid"), col("c_u"), col("csum"),
-        VectorFunctions.dotLong(col("c_u"), col("c_u")).as("c2u"))
+  /** (vec_id, e_u) rows, driver-side and vec_id-sorted. */
+  private def collectVecs(df: DataFrame): Seq[(Long, Array[Long])] =
+    df.select(col("vec_id"), col("e_u")).collect().toSeq
+      .map(r => (r.getLong(0), r.getSeq[Long](1).toArray)).sortBy(_._1)
+
+  /** Exact Σvᵢ² in µ² units — [[VectorFunctions.dotLong]] of v with itself. */
+  private def sqNorm(v: Array[Long]): Long = v.foldLeft(0L)((s, x) => s + x * x)
+
+  /** One Lloyd iteration of every model as ONE Spark job; model m
+    * trains on e_u[m·sub, (m+1)·sub), sub its codeword width. Each task
+    * assigns through [[graft.functions.CentroidIndex]]'s exact argmin
+    * and keeps, per touched cell, a count and exact Long sums (a map-side
+    * combine); treeReduce merges them. Long sums are associative, so the
+    * half-away integer mean is bit-identical to [[lloydIterSql]]'s
+    * GROUP BY, and a cell with no members drops out as it does there. */
+  private[graft] def lloydStep(train: DataFrame, models: Seq[Model]): Seq[Model] = {
+    val idx = models.map(graft.functions.CentroidIndex.build).toArray
+    val sub = idx(0).vecs(0).length
+    val sums = train.select(col("e_u")).queryExecution.toRdd
+      .mapPartitions { rows =>
+        val cells = idx.map(b => new Array[Array[Long]](b.k))
+        rows.filter(!_.isNullAt(0)).foreach { r =>
+          val eu = r.getArray(0).toLongArray()
+          for (m <- idx.indices) {
+            val part = java.util.Arrays.copyOfRange(eu, m * sub, (m + 1) * sub)
+            val cid = idx(m).assign(UnsafeArrayData.fromPrimitiveArray(part),
+              sqNorm(part)).getLong(1)
+            val j = java.util.Arrays.binarySearch(idx(m).cids, cid)
+            if (cells(m)(j) == null) cells(m)(j) = new Array[Long](sub + 1)
+            cells(m)(j)(0) += 1
+            for (p <- 0 until sub) cells(m)(j)(p + 1) += part(p)
+          }
+        }
+        Iterator.single(cells)
+      }
+      .treeReduce { (a, b) =>
+        for (m <- a.indices; j <- a(m).indices if b(m)(j) != null) {
+          if (a(m)(j) == null) a(m)(j) = b(m)(j)
+          else for (p <- 0 to sub) a(m)(j)(p) += b(m)(j)(p)
+        }
+        a
+      }
+    idx.indices.map { m =>
+      idx(m).cids.indices.filter(sums(m)(_) != null).map { j =>
+        val n = sums(m)(j)(0)
+        val cu = Array.tabulate(sub) { p =>
+          val sq = sums(m)(j)(p + 1)
+          if (sq >= 0) (sq * 2 + n) / (2 * n) else -((-sq * 2 + n) / (2 * n))
+        }
+        (idx(m).cids(j), cu, sqNorm(cu))
+      }
+    }
+  }
 
   /** Target Lloyd cell population: K = max(16, n DIV targetCell), so
     * cells hold ~2k vectors at ANY corpus size. This is the structural
@@ -873,8 +873,8 @@ object VectorQueries extends QueryModule {
     * two-decade wall: the round-8 100× suite sweep ran its budget dry
     * inside the ANN band), while K ∝ corpus keeps probe cost constant
     * and the centroid table a corpus-independent broadcast per decade
-    * (732 rows at 100× sf0.1 — still trivially broadcastable; the
-    * (cell, pos) recompute shuffle stays K·dim keys). The oracle
+    * (732 rows at 100× sf0.1 — still trivially broadcastable; each
+    * Lloyd step's merged partial sums stay K·dim longs). The oracle
     * derives the SAME K from count(*), so small scale factors
     * (n < 16·targetCell) are bit-identical to the historical K=16. */
   private[graft] val targetCell = 2048L
@@ -888,23 +888,18 @@ object VectorQueries extends QueryModule {
     derivedK(Tables.embeddings(s, d).count())
 
   /** Lloyd-train K = [[derivedK]] centroids for `iters` iterations
-    * from the first-K seed. Each iteration is one indexed-assign scan
-    * of the training sample ([[assignMin]]'s pruned exact argmin) +
-    * one (cell, pos)-keyed shuffle, MATERIALIZED to the driver as the
-    * K-row model between iterations — so iteration i's job reads the
-    * persisted sample and a local model, never a lineage chain of all
-    * prior iterations (the old lazy foldLeft nested every iteration's
-    * broadcast inside the next; with per-iteration collects that shape
-    * would re-evaluate the whole prefix per step). Output (cid, c_u,
-    * csum, c2u) as a local DataFrame — all integer micro-units,
-    * bit-identical to the historical chain. Shared by the k-means
-    * trainer, the IVF quantizer, and the Recall sweep. */
+    * from the first-K seed, one [[lloydStep]] job per iteration over
+    * the persisted training sample; the K-row model returns to the
+    * driver in between, so no iteration plans over a lineage chain.
+    * Output (cid, c_u, csum, c2u) as a local DataFrame — all integer
+    * micro-units, bit-identical to the oracle's [[lloydIterSql]] chain.
+    * Shared by the k-means trainer, the IVF quantizer, and Recall. */
   private[graft] def trainCentroids(s: SparkSession, d: String,
       iters: Int): DataFrame =
     trainCentroidsOn(s, embWithEu(s, d), iters)
 
   /** [[trainCentroids]] over an explicit corpus DataFrame (vec_id,
-    * e_u, n2u — extra columns ignored): the form a TxnLog-backed
+    * e_u — extra columns ignored): the form a TxnLog-backed
     * corpus trains through, where "the corpus" is a versioned snapshot
     * rather than a directory. K/seed/stride all derive from THIS
     * population, so a base-version training run is reproducible from
@@ -913,7 +908,9 @@ object VectorQueries extends QueryModule {
   private[graft] def trainCentroidsOn(s: SparkSession, corpus: DataFrame,
       iters: Int): DataFrame = {
     import s.implicits._
-    val n = corpus.count()
+    // An RDD count of the scan: one job, where Dataset.count's partial
+    // aggregate and exchange are two under AQE.
+    val n = corpus.select(col("vec_id")).queryExecution.toRdd.count()
     val k = derivedK(n)
     // Train the quantizer on a deterministic ~64·K subsample (every
     // stride-th vec_id) — the standard IVF training regime (~30–256
@@ -927,21 +924,13 @@ object VectorQueries extends QueryModule {
     val stride = math.max(1L, n / (64L * k))
     // Trimmed to the integer carrier; persisted because every
     // iteration re-scans it.
-    val e = corpus.select(col("vec_id"), col("e_u"), col("n2u"))
+    val e = corpus.select(col("vec_id"), col("e_u"))
     val tr = StagedCache.persist(e.filter(col("vec_id") % stride === 0))
-    var model: Seq[(Long, Seq[Long], Long, Long)] =
-      e.filter(col("vec_id") < k)
-        .select(col("vec_id"), col("e_u"), col("n2u"))
-        .as[(Long, Seq[Long], Long)].collect().toSeq.sortBy(_._1)
-        .map { case (cid, cu, n2) => (cid, cu, cu.sum, n2) }
-    for (_ <- 1 to iters) {
-      val index = graft.functions.CentroidIndex.build(
-        model.map { case (cid, cu, _, c2u) => (cid, cu.toArray, c2u) })
-      model = recomputeCentroids(assignMinIndexed(tr, index))
-        .select(col("cid"), col("c_u"), col("csum"), col("c2u"))
-        .as[(Long, Seq[Long], Long, Long)].collect().toSeq.sortBy(_._1)
-    }
-    model.toDF("cid", "c_u", "csum", "c2u")
+    var model = collectVecs(e.filter(col("vec_id") < k))
+      .map { case (cid, cu) => (cid, cu, sqNorm(cu)) }
+    for (_ <- 1 to iters) model = lloydStep(tr, Seq(model)).head
+    model.map { case (cid, cu, c2u) => (cid, cu.toSeq, cu.sum, c2u) }
+      .toDF("cid", "c_u", "csum", "c2u")
   }
 
   /** The q_kmeans trainer, iteration count exposed so KMeansSpec can
@@ -1213,8 +1202,8 @@ object VectorQueries extends QueryModule {
     * from `prev` (argmin on the exact µ²-unit norm-identity distance —
     * pure BIGINT arithmetic, no float rounding anywhere in the ranking
     * key), then the half-away INTEGER micro-unit per-cell mean (cvp_u)
-    * and the integer centroid checksum — the same expression sequence
-    * the Spark-side [[recomputeCentroids]] runs, so every iteration
+    * and the integer centroid checksum — the same argmin, tie-break
+    * and mean the Spark-side [[lloydStep]] computes, so every iteration
     * matches bit-for-bit with no representable-half rounding hazard.
     * Expects CTEs `base` (vec_id, embedding, e_u, n2u) and `$prev`
     * (cid, c_u, c2u) in scope; defines `t$i` (cid, c_u, csum, c2u). */

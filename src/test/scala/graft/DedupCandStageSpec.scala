@@ -40,4 +40,14 @@ class DedupCandStageSpec extends AnyFunSuite with SparkSpec {
     assert(graft.queries.StagedCache.stagedCount === 1)
     graft.queries.StagedCache.releaseAll()
   }
+
+  test("a malformed threshold fails naming its key and value") {
+    spark.conf.set("spark.graft.dedup.candStageBytes", "1MiB")
+    val err =
+      try intercept[IllegalArgumentException](
+        SparkEntry.queries("q_containment_pairs")(spark, sf).collect())
+      finally spark.conf.unset("spark.graft.dedup.candStageBytes")
+    assert(err.getMessage.contains("spark.graft.dedup.candStageBytes"))
+    assert(err.getMessage.contains("'1MiB'"))
+  }
 }

@@ -34,4 +34,14 @@ class GapFillSpec extends AnyFunSuite with SparkSpec {
     fn(spark, sf).write.format("noop").mode("overwrite").save()
     assert(graft.queries.StagedCache.stagedCount === 0)
   }
+
+  test("a malformed threshold fails naming its key and value") {
+    spark.conf.set("spark.graft.gapfill.stageBytes", "8MB")
+    val err =
+      try intercept[IllegalArgumentException](
+        SparkEntry.queries("q_gap_fill")(spark, sf).collect())
+      finally spark.conf.unset("spark.graft.gapfill.stageBytes")
+    assert(err.getMessage.contains("spark.graft.gapfill.stageBytes"))
+    assert(err.getMessage.contains("'8MB'"))
+  }
 }

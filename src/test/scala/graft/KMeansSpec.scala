@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.graftbridge.ListenerDrain
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.queries.VectorQueries
@@ -69,5 +71,139 @@ class KMeansSpec extends AnyFunSuite with SparkSpec {
     }
     assert(got.count(_.getLong(2) % 1000000L == 500000L) == 3,
       "planted half-point distances must survive exactly")
+  }
+
+  // ---- lloydStep: bit-identity against a plain-Scala reference Lloyd ----
+
+  private type Model = VectorQueries.Model
+
+  /** Half-away-from-zero rounding of sq/n, written from the remainder
+    * (not the engine's (2·sq + n) DIV 2n form). */
+  private def halfAway(sq: Long, n: Long): Long = {
+    val a = BigInt(sq).abs
+    val q = a / n + (if ((a % n) * 2 >= n) 1 else 0)
+    (if (sq < 0) -q else q).toLong
+  }
+
+  private def sqNorm(v: Array[Long]): Long = v.map(x => x * x).sum
+
+  /** One reference Lloyd step: flat argmin over every centroid by
+    * (exact squared difference, cid), half-away integer per-cell mean,
+    * cells with no members dropped. */
+  private def refStep(vs: Seq[Array[Long]], model: Model): Model = {
+    def d2(a: Array[Long], b: Array[Long]): BigInt =
+      a.zip(b).map { case (x, y) => BigInt(x - y).pow(2) }.sum
+    val cells = vs.groupBy(v => model.minBy { case (cid, c, _) => (d2(v, c), cid) }._1)
+    model.map(_._1).filter(cells.contains).map { cid =>
+      val m = cells(cid)
+      val cu = m.head.indices.map(p => halfAway(m.map(_(p)).sum, m.size)).toArray
+      (cid, cu, sqNorm(cu))
+    }
+  }
+
+  private def seedOf(vs: Seq[(Long, Array[Long])], k: Long): Model =
+    vs.filter(_._1 < k).sortBy(_._1).map { case (id, v) => (id, v, sqNorm(v)) }
+
+  private def show(m: Model): Seq[(Long, Seq[Long], Long)] =
+    m.map { case (cid, cu, c2) => (cid, cu.toSeq, c2) }
+
+  private def corpus(vs: Seq[(Long, Array[Long])]) = {
+    val s = spark
+    import s.implicits._
+    vs.map { case (id, v) => (id, v.toSeq) }.toDF("vec_id", "e_u").repartition(3)
+  }
+
+  // Planted: c0/c1 sit 4 apart and (2,0,0,0) is EXACTLY between them
+  // (tie → cid 0); c2 attracts no vector (dropped); c1's cell averages
+  // to exact positive halves, c3's to exact NEGATIVE halves (-12.5,
+  // -10.5, -9.5 → -13, -11, -10 half-away, not floor or half-even).
+  private val planted: Seq[(Long, Array[Long])] = Seq(
+    Array(0L, 0L, 0L, 0L), Array(4L, 0L, 0L, 0L),
+    Array(100L, 100L, 100L, 100L), Array(-10L, -10L, -10L, -10L),
+    Array(2L, 0L, 0L, 0L), Array(0L, 1L, 0L, 0L), Array(1L, 0L, 0L, 1L),
+    Array(5L, 0L, 0L, 0L), Array(4L, 1L, 0L, 0L),
+    Array(-12L, -11L, -10L, -9L), Array(-13L, -10L, -10L, -10L))
+    .zipWithIndex.map { case (v, i) => (i.toLong + 100, v) }
+  private val plantedSeed: Model = planted.take(4)
+    .map { case (id, v) => (id - 100, v, sqNorm(v)) }
+
+  private def sliceModel(m: Model, lo: Int, hi: Int): Model =
+    m.map { case (cid, cu, _) => val s = cu.slice(lo, hi); (cid, s, sqNorm(s)) }
+
+  test("one Lloyd step matches the reference on planted ties, halves and an empty cell") {
+    val got = VectorQueries.lloydStep(corpus(planted.drop(4)), Seq(plantedSeed)).head
+    val want = refStep(planted.drop(4).map(_._2), plantedSeed)
+    assert(show(got) === show(want))
+    assert(got.map(_._1) === Seq(0L, 1L, 3L), "the empty cell must drop out")
+    assert(got.find(_._1 == 0L).get._2.toSeq === Seq(1L, 0L, 0L, 0L),
+      "the exact tie must go to the smaller cid")
+    assert(got.find(_._1 == 1L).get._2.toSeq === Seq(5L, 1L, 0L, 0L))
+    assert(got.find(_._1 == 3L).get._2.toSeq === Seq(-13L, -11L, -10L, -10L))
+  }
+
+  test("a multi-book pass equals one pass per book") {
+    import org.apache.spark.sql.functions.{col, slice}
+    val df = corpus(planted.drop(4))
+    val books = Seq(sliceModel(plantedSeed, 0, 2), sliceModel(plantedSeed, 2, 4))
+    val multi = VectorQueries.lloydStep(df, books)
+    val single = books.indices.map(m => VectorQueries.lloydStep(
+      df.select(slice(col("e_u"), 2 * m + 1, 2).as("e_u")), Seq(books(m))).head)
+    assert(multi.map(show) === single.map(show))
+    val ref = books.indices.map(m =>
+      refStep(planted.drop(4).map(_._2.slice(2 * m, 2 * m + 2)), books(m)))
+    assert(multi.map(show) === ref.map(show))
+  }
+
+  /** 300 seeded integer vectors; vec 5 duplicates vec 4, so seed cid 5
+    * ties cid 4 exactly at every vector and trains an empty cell. */
+  private def randomCorpus(dim: Int): Seq[(Long, Array[Long])] = {
+    val r = new scala.util.Random(7)
+    val vs = (0 until 300).map(i => (i.toLong, Array.fill(dim)(r.nextInt(101).toLong - 50)))
+    vs.updated(5, (5L, vs(4)._2.clone()))
+  }
+
+  test("the coarse trainer matches the reference Lloyd chain") {
+    val vs = randomCorpus(8)
+    val got = VectorQueries.trainCentroidsOn(spark, corpus(vs), 3).collect()
+      .map(r => (r.getLong(0), r.getSeq[Long](1), r.getLong(2), r.getLong(3))).toSeq
+    val k = VectorQueries.derivedK(vs.size.toLong)
+    val ref = (1 to 3).foldLeft(seedOf(vs, k))((m, _) => refStep(vs.map(_._2), m))
+    assert(got === ref.map { case (cid, cu, c2) => (cid, cu.toSeq, cu.sum, c2) })
+    assert(!got.exists(_._1 == 5L), "the duplicated seed must train an empty cell")
+  }
+
+  test("the PQ trainer matches a reference Lloyd per book") {
+    import VectorQueries.{pqIters, pqK, pqM, pqSub}
+    val vs = randomCorpus(pqM * pqSub)
+    val got = VectorQueries.trainPqBooks(spark, corpus(vs))
+    val ref = (0 until pqM).map { m =>
+      val sub = vs.map { case (id, v) => (id, v.slice(m * pqSub, (m + 1) * pqSub)) }
+      (1 to pqIters).foldLeft(seedOf(sub, pqK))((b, _) => refStep(sub.map(_._2), b))
+    }
+    assert(got.map(show) === ref.map(show))
+  }
+
+  /** Spark jobs submitted while `body` runs. */
+  private def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
+    }
+    ListenerDrain(sc)
+    sc.addSparkListener(l)
+    try { body; ListenerDrain(sc) } finally sc.removeSparkListener(l)
+    n.get
+  }
+
+  test("each Lloyd iteration is one Spark job") {
+    import org.apache.spark.sql.functions.col
+    val iters = 3
+    val coarse = jobsDuring(VectorQueries.trainCentroids(spark, sf, iters))
+    assert(coarse <= iters + 3, s"coarse trainer ran $coarse jobs")
+    val emb = graft.sources.Tables.embeddings(spark, sf).select(col("vec_id"),
+      graft.functions.VectorFunctions.microUnits(col("embedding")).as("e_u"))
+    val pq = jobsDuring(VectorQueries.trainPqBooks(spark, emb))
+    assert(pq <= VectorQueries.pqIters + 2, s"PQ trainer ran $pq jobs")
   }
 }
