@@ -5,6 +5,8 @@ import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions.{col, input_file_name}
 import org.apache.spark.util.LongAccumulator
 
+import graft.GraftConf
+
 /** Deterministic slow-task ("straggler") injection — the Spark
   * re-expression of the reference's chaos harness (SURVEY §2.11 T7–T9):
   *
@@ -49,17 +51,20 @@ object SlowInject {
   }
 
   private def readConf(spark: SparkSession, side: String): SlowConf = {
-    def get(k: String): Option[String] =
-      try Option(spark.conf.get(s"spark.graft.slow.$side.$k")).filter(_.nonEmpty)
-      catch { case _: Exception => None }
+    // An empty value reads as unset.
+    def get[A](k: String)(parse: String => Option[A]): Option[A] =
+      GraftConf.get(spark, s"spark.graft.slow.$side.$k") { v =>
+        if (v.isEmpty) Some(None) else parse(v).map(Some(_))
+      }.flatten
     SlowConf(
-      partitions = get("partitions").map(_.split(",").map(_.trim.toInt).toSet)
+      partitions = get("partitions")(v =>
+        scala.util.Try(v.split(",").map(_.trim.toInt).toSet).toOption)
         .getOrElse(Set.empty),
-      sleepMs = math.min(get("sleep.ms").map(_.toLong).getOrElse(0L), MaxSleepMs),
-      eachN = math.max(get("eachN").map(_.toLong).getOrElse(1L), 1L),
-      pathContains = get("input.contains"),
-      heavyKey = get("heavy.key"),
-      heavySleepMs = math.min(get("heavy.sleep.ms").map(_.toLong).getOrElse(0L),
+      sleepMs = math.min(get("sleep.ms")(_.toLongOption).getOrElse(0L), MaxSleepMs),
+      eachN = math.max(get("eachN")(_.toLongOption).getOrElse(1L), 1L),
+      pathContains = get("input.contains")(Some(_)),
+      heavyKey = get("heavy.key")(Some(_)),
+      heavySleepMs = math.min(get("heavy.sleep.ms")(_.toLongOption).getOrElse(0L),
         MaxSleepMs))
   }
 

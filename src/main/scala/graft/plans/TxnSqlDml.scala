@@ -12,6 +12,7 @@ import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{DataType, StructType}
 
+import graft.GraftConf
 import graft.sources.{GraftCatalog, TxnLog, TxnTable}
 
 /** SQL DML over the transaction log: `DELETE FROM` / `UPDATE` /
@@ -427,9 +428,8 @@ object TxnSqlDml {
       * coercion shows up as a Cast over the ATTRIBUTE and disqualifies
       * there, same as the literal form. */
     private def subqueryValues(exprId: Long, plan: LogicalPlan): Option[Seq[Any]] = {
-      val maxRows = spark.conf
-        .getOption("spark.graft.bloom.probe.inSubqueryMaxRows")
-        .map(_.toInt).getOrElse(1000)
+      val maxRows = GraftConf.get(spark,
+        "spark.graft.bloom.probe.inSubqueryMaxRows")(_.toIntOption).getOrElse(1000)
       if (maxRows <= 0) return None
       // Memoized per ListQuery exprId: the analyzer's fixpoint
       // re-applies this rule several times over the SAME resolved
@@ -631,8 +631,8 @@ case class GraftVacuumCommand(dir: String, retainVersions: Int,
     Seq(org.apache.spark.sql.catalyst.expressions.AttributeReference(
       "path", org.apache.spark.sql.types.StringType, nullable = false)())
   override def run(spark: SparkSession): Seq[Row] = {
-    val retainMillis = spark.conf.getOption("spark.graft.vacuum.retainMillis")
-      .map(_.toLong).getOrElse(TxnLog.DefaultVacuumRetainMillis)
+    val retainMillis = GraftConf.get(spark, "spark.graft.vacuum.retainMillis")(
+      _.toLongOption).getOrElse(TxnLog.DefaultVacuumRetainMillis)
     TxnLog.vacuum(spark, dir, retainVersions, retainMillis, dryRun)
       .map(Row(_))
   }

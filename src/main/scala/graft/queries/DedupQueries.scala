@@ -127,8 +127,8 @@ object DedupQueries extends QueryModule {
     // between the two measured base-stats points (166 KB / 2.2 MB) —
     // the sf0.1 bench plan stays byte-identical, and a 100 TB corpus
     // (far past any threshold) always stages.
-    val stageBytes = StagedCache.bytesConf(base.sparkSession,
-      "spark.graft.dedup.candStageBytes", 1L * 1024 * 1024)
+    val stageBytes = graft.GraftConf.get(base.sparkSession,
+      "spark.graft.dedup.candStageBytes")(_.toLongOption).getOrElse(1L * 1024 * 1024)
     val sampledPlain = graft.operators.SkewGuard.capBuckets(
       base.select(col("doc_id"), explode(col("hs")).as("h"))
         .filter(col("h") % 8 === 0),

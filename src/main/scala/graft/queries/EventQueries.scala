@@ -195,8 +195,8 @@ object EventQueries extends QueryModule {
       // between the two measured points — the sf0.1 bench plan stays
       // byte-identical, and a 100 TB events table (far past any
       // threshold) always takes the one-scan path.
-      val stageBytes = graft.queries.StagedCache.bytesConf(s,
-        "spark.graft.gapfill.stageBytes", 8L * 1024 * 1024)
+      val stageBytes = graft.GraftConf.get(s,
+        "spark.graft.gapfill.stageBytes")(_.toLongOption).getOrElse(8L * 1024 * 1024)
       val big = ev.queryExecution.optimizedPlan.stats.sizeInBytes >=
         BigInt(stageBytes)
       val hourlyPlain = ev.groupBy("user_id", "hr")

@@ -53,13 +53,6 @@ object StagedCache {
     cp
   }
 
-  /** The byte-size threshold past which a query stages an intermediate,
-    * read from conf `key` (else `default`). A malformed value fails
-    * with an error naming the key and the value. */
-  def bytesConf(s: SparkSession, key: String, default: Long): Long =
-    s.conf.getOption(key).fold(default)(v => v.toLongOption.getOrElse(
-      throw new IllegalArgumentException(s"$key must be a whole number of bytes, got '$v'")))
-
   /** Release ONE staged table mid-scope — the iterative-trainer pattern
     * (BPE, Lloyd): round k's word table is dead the moment round k+1's
     * has materialized, and keeping the chain staged pins K+1 corpus

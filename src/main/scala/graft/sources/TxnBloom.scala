@@ -233,10 +233,7 @@ object TxnBloom {
     // byte-identical, a wide object-store write reads its footers in
     // ONE Spark job instead of O(files) blocking driver RPCs.
     val mByRel: Map[String, Long] =
-      MetaFanout.adaptiveMap(spark, staged,
-        "spark.graft.bloom.footer.localOps",
-        "spark.graft.bloom.footer.crossoverMs") { (conf, rel) =>
-        MetaFanout.simulatedLatency()
+      MetaFanout.adaptiveMap(spark, staged) { (conf, rel) =>
         Seq(rel -> mBitsFor(footerRows(conf, table, rel)))
       }.toMap
     val absolute = staged.map(rel => new Path(table, rel).toString)
@@ -343,22 +340,6 @@ object TxnBloom {
     } catch { case _: java.io.IOException => None } finally in.close()
   }
 
-  /** Hadoop `Configuration` is not `java.io.Serializable`; this is the
-    * standard Writable-over-ObjectStream wrapper (the same pattern
-    * Spark uses internally) so the distributed probe's tasks can
-    * rebuild a correctly-credentialed FileSystem on executors. */
-  private final class SerConf(@transient var value:
-      org.apache.hadoop.conf.Configuration) extends Serializable {
-    private def writeObject(out: java.io.ObjectOutputStream): Unit = {
-      out.defaultWriteObject(); value.write(out)
-    }
-    private def readObject(in: java.io.ObjectInputStream): Unit = {
-      in.defaultReadObject()
-      value = new org.apache.hadoop.conf.Configuration(false)
-      value.readFields(in)
-    }
-  }
-
   /** Bounded LRU keyed by strings — eldest-accessed evicts first, and
     * a byte budget keeps cached bitsets from growing past a fraction
     * of driver memory. Shared driver/executor-side (in local mode one
@@ -437,21 +418,11 @@ object TxnBloom {
       Some(Sidecar(k, m, bits))
     } catch { case _: java.io.IOException => None }
 
-  /** TEST-ONLY injected latency per SOURCE OPEN (ms) — BloomProbeBench
-    * uses it to model object-store metadata round-trips (10–50 ms per
-    * GET) on a local filesystem, measuring where the distributed probe
-    * crosses over the serial one and whether the 64-open default
-    * budget holds there. A static volatile (not a conf) so local-mode
-    * executor tasks see it too; always 0 outside the bench. */
-  @volatile private[graft] var testOpenDelayMs: Long = 0L
-  private def simulatedOpenLatency(): Unit =
-    if (testOpenDelayMs > 0L) Thread.sleep(testOpenDelayMs)
-
   /** Probe one SOURCE file (a `seg-*.gbs` segment or a legacy
     * `*.bloom` sidecar) against `values`, restricted to rel paths in
     * `needed`: emits (rel, keep) verdicts for every covered needed
-    * file, nothing for the rest. Runs identically on the driver (warm
-    * path) and inside distributed probe tasks — one implementation,
+    * file, nothing for the rest. Runs identically on the driver (serial
+    * leg) and inside distributed probe tasks — one implementation,
     * so the two paths cannot disagree. Unreadable/corrupt sources
     * yield NO verdicts (their files stay — false-positive-only). */
   private def probeSource(f: FileSystem, path: String, mtime: Long, len: Long,
@@ -466,14 +437,12 @@ object TxnBloom {
       val rel = dec(p.getName)
       if (!needed(rel)) Nil
       else entryCache.get(key).orElse {
-        simulatedOpenLatency()
         val sc = readSidecar(f, p)
         sc.foreach(entryCache.put(key, _))
         sc
       }.map(sc => Seq(rel -> keep(sc))).getOrElse(Nil)
     } else {
       val idx = indexCache.get(key).orElse {
-        simulatedOpenLatency()
         val i = readSegmentIndex(f, p, len)
         i.foreach(indexCache.put(key, _))
         i
@@ -489,7 +458,6 @@ object TxnBloom {
       val fromDisk =
         if (missing.isEmpty) Nil
         else {
-          simulatedOpenLatency()
           val in = f.open(p)
           // Forward seeks only: read in offset order.
           try missing.sortBy(_._2).flatMap { case (rel, off) =>
@@ -512,20 +480,16 @@ object TxnBloom {
     * difference between one metadata round-trip and a million).
     *
     * Execution: sources fully answerable from the driver cache cost
-    * zero I/O. Cold sources are MEASURED, not guessed (round-14
-    * verdict #8): the first few open serially and time themselves,
-    * and the remainder go serial only when BOTH (a) the count is
-    * within `spark.graft.bloom.probe.localOpens` (default 64) and
-    * (b) the projected serial wall (measured ms/open × remaining) is
-    * under `spark.graft.bloom.probe.crossoverMs` (default 250 — about
-    * the cost of launching the ONE Spark metadata job the distributed
-    * path uses). On a local FS (~0.3 ms/open) hundreds of opens stay
+    * zero I/O. Cold sources go through [[MetaFanout.adaptiveMap]], so
+    * they are MEASURED, not guessed: the first few open serially and
+    * time themselves, and the rest stay serial only while the
+    * projected serial wall stays under the shared crossover (about the
+    * cost of launching the ONE Spark metadata job the distributed path
+    * uses). On a local FS (~0.3 ms/open) hundreds of opens stay
     * serial; on object-store latency (10–50 ms/GET, where
     * BloomProbeBench's injected-latency sweep put the crossover at
     * ~15–25 opens) the same probe fans out after the sample — wall
-    * time opens/parallelism instead of a driver stall ∝ commit count
-    * (round-13 verdict #1). `localOpens = 0` forces the distributed
-    * path outright. */
+    * time opens/parallelism instead of a driver stall ∝ commit count. */
   private[graft] def filterByBloom(spark: SparkSession, table: String,
       column: String, values: Seq[Any],
       files: Seq[(String, TxnLog.FileState)]): Seq[(String, TxnLog.FileState)] = {
@@ -568,51 +532,9 @@ object TxnBloom {
         }
       }
     }
-    if (cold.nonEmpty) {
-      val budget = spark.conf.getOption("spark.graft.bloom.probe.localOpens")
-        .map(_.toInt).getOrElse(64)
-      val crossoverMs = spark.conf
-        .getOption("spark.graft.bloom.probe.crossoverMs")
-        .map(_.toDouble).getOrElse(250.0)
-      def serial(srcs: Seq[(String, Long, Long)]): Seq[(String, Boolean)] =
-        srcs.flatMap { case (p, mt, ln) =>
-          probeSource(f, p, mt, ln, neededSet, values)
-        }
-      def distribute(srcs: Seq[(String, Long, Long)]): Seq[(String, Boolean)] = {
-        val sc = spark.sparkContext
-        val confB = sc.broadcast(new SerConf(sc.hadoopConfiguration))
-        val neededB = sc.broadcast(neededSet)
-        val vals = values
-        val tasks = math.min(srcs.size,
-          math.max(1, sc.defaultParallelism * 2))
-        sc.parallelize(srcs, tasks).flatMap { case (p, mt, ln) =>
-          val pf = new Path(p).getFileSystem(confB.value.value)
-          probeSource(pf, p, mt, ln, neededB.value, vals)
-        }.collect().toSeq
-      }
-      val results: Seq[(String, Boolean)] =
-        if (budget <= 0) distribute(cold.toSeq)
-        else {
-          // Sample-then-decide: open a few serially (cheap on every
-          // store), project the remainder from the measured ms/open,
-          // and distribute when EITHER the fixed budget or the
-          // projected wall says the driver loop would stall.
-          val sampleN = math.min(math.min(8, budget), cold.size)
-          val t0 = System.nanoTime()
-          val sampled = serial(cold.take(sampleN).toSeq)
-          val sampleMs = (System.nanoTime() - t0) / 1e6
-          val rest = cold.drop(sampleN).toSeq
-          val projectedMs = if (sampleN == 0) 0.0
-            else sampleMs / sampleN * rest.size
-          val restResults =
-            if (rest.isEmpty) Nil
-            else if (rest.size <= budget - sampleN &&
-                projectedMs <= crossoverMs) serial(rest)
-            else distribute(rest)
-          sampled ++ restResults
-        }
-      results.foreach { case (rel, k) => verdicts(rel) = k }
-    }
+    MetaFanout.adaptiveMap(spark, cold.toSeq) { case (conf, (p, mt, ln)) =>
+      probeSource(new Path(p).getFileSystem(conf), p, mt, ln, neededSet, values)
+    }.foreach { case (rel, k) => verdicts(rel) = k }
     files.filter { case (rel, _) => verdicts.getOrElse(rel, true) }
   }
 

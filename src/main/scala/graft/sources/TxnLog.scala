@@ -5,7 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
-import graft.JsonUtil
+import graft.{GraftConf, JsonUtil}
 
 /** A versioned transaction log over plain parquet — the minimal ACID
   * table core of the published lakehouse designs (Armbrust et al.,
@@ -1604,9 +1604,8 @@ object TxnLog {
       Literal, SubqueryExpression}
     val e = Bridge.catalystExpression(predicate)
     if (!e.exists(_.isInstanceOf[SubqueryExpression])) return predicate
-    val cap = spark.conf
-      .getOption("spark.graft.replaceWhere.inSubqueryMaxRows")
-      .map(_.toInt).getOrElse(100000)
+    val cap = GraftConf.get(spark,
+      "spark.graft.replaceWhere.inSubqueryMaxRows")(_.toIntOption).getOrElse(100000)
     val out = e.transform {
       case InSubquery(values, lq) =>
         require(values.length == 1,
@@ -2016,10 +2015,7 @@ object TxnLog {
     * files × object-store latency. Input order preserved. */
   private def probeLens(spark: SparkSession, table: String,
       rels: Seq[String]): Seq[(String, Long)] =
-    MetaFanout.adaptiveMap(spark, rels,
-      "spark.graft.txn.probe.localOps",
-      "spark.graft.txn.probe.crossoverMs") { (conf, rel) =>
-      MetaFanout.simulatedLatency()
+    MetaFanout.adaptiveMap(spark, rels) { (conf, rel) =>
       val p = dataPathObj(table, rel)
       // ONLY FileNotFound means "physically missing" (−1): a transient
       // store/auth error must propagate, not masquerade as a vacuumed
@@ -2051,36 +2047,27 @@ object TxnLog {
     * extension) under `source`, qualified. The r16 form was a serial
     * recursive `listStatus` on the driver over the ENTIRE source tree
     * on EVERY run — the scale-killer shape at object-store LIST
-    * latency × a mature landing zone. Now an adaptive breadth-first
-    * walk: a few directories list serially (the measured sample), and
-    * once the projected remaining wall
-    * (`spark.graft.copy.list.crossoverMs`, 250 ms — from the measured
-    * ms/LIST) or the hard serial cap (`spark.graft.copy.list.localOps`,
-    * 100k) is exceeded, the remaining frontier fans out as ONE Spark
-    * job whose tasks walk their subtrees with executor-side listings.
+    * latency × a mature landing zone. Now an adaptive walk: a few
+    * directories list serially (the measured sample), and once
+    * [[MetaFanout.distributeRest]] — the same rule `adaptiveMap`'s
+    * serial leg applies, with the frontier as the remaining ops —
+    * says so, the remaining frontier fans out as ONE Spark job whose
+    * tasks walk their subtrees with executor-side listings. The root
+    * always lists serially: the frontier IS the distribution unit.
     * On a local FS the serial leg wins (sub-ms listings only cross
-    * 250 ms at very deep trees); on an object store a wide landing
-    * zone lists at task parallelism. */
+    * the crossover at very deep trees); on an object store a wide
+    * landing zone lists at task parallelism. */
   private[graft] def listSourceFiles(spark: SparkSession, source: String,
       exts: Set[String]): Seq[String] = {
     val srcRoot = new Path(source)
     val sf = fs(spark, srcRoot)
-    val budget = spark.conf.getOption("spark.graft.copy.list.localOps")
-      .map(_.toInt).getOrElse(100000)
-    val crossoverMs = spark.conf.getOption("spark.graft.copy.list.crossoverMs")
-      .map(_.toDouble).getOrElse(250.0)
+    MetaFanout.rejectRetired(spark)
     val found = scala.collection.mutable.ArrayBuffer.empty[String]
     var frontier = List(sf.makeQualified(srcRoot))
     var ops = 0
     var spentNs = 0L
-    // Even a forced-distributed run (budget ≤ 0) lists the root once
-    // serially: the frontier IS the distribution unit.
-    val sampleN = math.max(1, math.min(8, budget))
     while (frontier.nonEmpty) {
-      val projectedMs =
-        if (ops == 0) 0.0 else spentNs / 1e6 / ops * frontier.size
-      if (ops >= sampleN && (budget <= 0 || ops + frontier.size > budget ||
-          projectedMs > crossoverMs)) {
+      if (ops > 0 && MetaFanout.distributeRest(ops, spentNs / 1e6, frontier.size)) {
         found ++= MetaFanout.distribute(spark, frontier.map(_.toString)) {
           (conf, ds) =>
             val p = new Path(ds)
@@ -2730,7 +2717,7 @@ object TxnLog {
   private def clusterWriteApplies(spark: SparkSession,
       schema: Option[StructType], df: DataFrame): Boolean = {
     val keys = schema.map(clusterColumns).getOrElse(Nil)
-    spark.conf.getOption(ClusterOnWriteConf).exists(_.toBoolean) &&
+    GraftConf.get(spark, ClusterOnWriteConf)(_.toBooleanOption).contains(true) &&
       keys.nonEmpty &&
       keys.forall(k => df.columns.exists(_.equalsIgnoreCase(k)))
   }
@@ -2891,10 +2878,7 @@ object TxnLog {
     // exactly like FSCK's existence probe: small writes stay serial
     // (local footer reads are ~1 ms), wide writes read their footers
     // in ONE Spark job.
-    MetaFanout.adaptiveMap(spark, staged,
-      "spark.graft.stats.footer.localOps",
-      "spark.graft.stats.footer.crossoverMs") { (conf, rel) =>
-      MetaFanout.simulatedLatency()
+    MetaFanout.adaptiveMap(spark, staged) { (conf, rel) =>
       Seq(rel -> footerStats(table, rel, columns, physOf, conf))
     }.toMap
   }
@@ -3424,11 +3408,10 @@ object TxnLog {
     * probe window just leaves the work for the next write (the
     * caller's commit already published; round-13 advice, low). */
   private def maybeAutoCompact(spark: SparkSession, table: String): Unit =
-    spark.conf.getOption("spark.graft.autoCompact.minFiles")
-      .map(_.toInt).foreach { minFiles =>
-      val maxBytes = spark.conf
-        .getOption("spark.graft.autoCompact.maxFileBytes")
-        .map(_.toLong).getOrElse(32L << 20)
+    GraftConf.get(spark, "spark.graft.autoCompact.minFiles")(_.toIntOption)
+      .foreach { minFiles =>
+      val maxBytes = GraftConf.get(spark,
+        "spark.graft.autoCompact.maxFileBytes")(_.toLongOption).getOrElse(32L << 20)
       val sizes = probeLens(spark, table, snapshot(spark, table))
         .map(_._2).filter(l => l >= 0 && l < maxBytes)
       if (sizes.size >= minFiles)
@@ -4611,7 +4594,7 @@ object TxnLog {
     * removed (or whose files reappeared) drop out of the repair.
     * O(live files) existence probes, zero data I/O — and the probes
     * go through [[MetaFanout.adaptiveMap]] (sample-then-decide, the
-    * bloom probe's crossover), so at object-store latency × many
+    * shared crossover), so at object-store latency × many
     * files they run as ONE short Spark job instead of a serial
     * driver loop (at 100k files × 50 ms/probe the serial form is
     * ~85 minutes; the distributed form is one wide metadata job). */
@@ -4619,10 +4602,7 @@ object TxnLog {
            dryRun: Boolean = false): Seq[String] = {
     def missingNow(): Seq[String] = {
       val live = snapshot(spark, table)
-      val dead = MetaFanout.adaptiveMap(spark, live,
-        "spark.graft.fsck.probe.localOps",
-        "spark.graft.fsck.probe.crossoverMs") { (conf, rel) =>
-        MetaFanout.simulatedLatency()
+      val dead = MetaFanout.adaptiveMap(spark, live) { (conf, rel) =>
         val p = dataPathObj(table, rel)
         if (p.getFileSystem(conf).exists(p)) Nil else Seq(rel)
       }.toSet
@@ -4781,10 +4761,7 @@ object TxnLog {
     val dead =
       if (retainMillis <= 0 || candidates.isEmpty) candidates
       else {
-        val retained = MetaFanout.adaptiveMap(spark, candidates,
-          "spark.graft.txn.probe.localOps",
-          "spark.graft.txn.probe.crossoverMs") { (conf, p) =>
-          MetaFanout.simulatedLatency()
+        val retained = MetaFanout.adaptiveMap(spark, candidates) { (conf, p) =>
           val fp = new Path(table, p)
           Seq(p -> scala.util.Try(fp.getFileSystem(conf)
             .getFileStatus(fp).getModificationTime).toOption
@@ -4795,10 +4772,7 @@ object TxnLog {
     if (dryRun) return dead // report the candidates, touch nothing
     // Deletes fan out too (one RPC per dead file; idempotent — a
     // retried task's second delete of the same path is a no-op).
-    MetaFanout.adaptiveMap(spark, dead,
-      "spark.graft.txn.probe.localOps",
-      "spark.graft.txn.probe.crossoverMs") { (conf, p) =>
-      MetaFanout.simulatedLatency()
+    MetaFanout.adaptiveMap(spark, dead) { (conf, p) =>
       val fp = new Path(table, p)
       scala.util.Try(fp.getFileSystem(conf).delete(fp, false))
       Nil: Seq[Int]

@@ -295,18 +295,16 @@ class BloomIndexSpec extends AnyFunSuite with SparkSpec {
       Seq("name-3", "name-42"), Seq(0L, 1L, 2L, 3L))
     probes.foreach { vs =>
       val col = if (vs.head.isInstanceOf[String]) "name" else "id"
-      // COLD distributed run first (budget 0 forces the Spark job),
-      // then a COLD driver-serial run — caches cleared between, so
-      // both paths actually exercise their I/O.
-      graft.sources.TxnBloom.clearProbeCaches()
-      spark.conf.set("spark.graft.bloom.probe.localOpens", "0")
-      val dist =
-        try graft.sources.TxnBloom
-          .filterByBloom(spark, t, col, vs, all).map(_._1).toSet
-        finally spark.conf.unset("spark.graft.bloom.probe.localOpens")
-      graft.sources.TxnBloom.clearProbeCaches()
-      val local = graft.sources.TxnBloom
-        .filterByBloom(spark, t, col, vs, all).map(_._1).toSet
+      // COLD distributed run first (the pinned route forces the Spark
+      // job), then a COLD driver-serial run — caches cleared between,
+      // so both paths actually exercise their I/O.
+      def run(distribute: Boolean): Set[String] = {
+        graft.sources.TxnBloom.clearProbeCaches()
+        FanoutPin(distribute)(graft.sources.TxnBloom
+          .filterByBloom(spark, t, col, vs, all).map(_._1).toSet)
+      }
+      val dist = run(distribute = true)
+      val local = run(distribute = false)
       assert(dist === local, s"probe $vs: distributed=$dist local=$local")
     }
   }
@@ -350,10 +348,8 @@ class BloomIndexSpec extends AnyFunSuite with SparkSpec {
     assert(TxnLog.readPrunedEq(spark, t, "id", Seq(0L, 1L, 2L, 3L))
       .count() === 4L)
     // Distributed path tolerates the garbage too.
-    spark.conf.set("spark.graft.bloom.probe.localOpens", "0")
-    try assert(graft.sources.TxnBloom
-      .filterByBloom(spark, t, "id", Seq(1L), all).nonEmpty)
-    finally spark.conf.unset("spark.graft.bloom.probe.localOpens")
+    assert(FanoutPin(distribute = true)(graft.sources.TxnBloom
+      .filterByBloom(spark, t, "id", Seq(1L), all).nonEmpty))
   }
 
   test("readPrunedEq composes stats + bloom: stats screen range-disjoint " +

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.hadoop.fs.Path
 
-import graft.sources.{TxnBloom, TxnLog}
+import graft.sources.{MetaFanout, TxnBloom, TxnLog}
 
 /** One-off micro-benchmark for the bloom point-lookup probe at
   * realistic 100 TB FILE COUNTS (`sbt "Test/runMain graft.BloomProbeBench"`)
@@ -54,13 +54,14 @@ object BloomProbeBench {
     * every source open sleeps `delayMs` first — the object-store
     * metadata-GET model the local FS can't exhibit (~0.3 ms/open vs
     * 10–50 ms real) — and the serial-vs-distributed crossover is swept
-    * over cold-source counts around the 64-open default budget. Each
-    * source is a legacy per-file sidecar so opens == sources exactly. */
+    * over cold-source counts next to the measured (unpinned) route.
+    * Each source is a legacy per-file sidecar so opens == sources
+    * exactly. */
   private def latencySweep(spark: org.apache.spark.sql.SparkSession,
       root: String, f: org.apache.hadoop.fs.FileSystem,
       delayMs: Long): Unit = {
     println(s"== injected per-open latency: ${delayMs}ms ==")
-    TxnBloom.testOpenDelayMs = delayMs
+    MetaFanout.testOpDelayMs = delayMs
     try {
       for (k <- Seq(8, 32, 64, 128, 256, 1024)) {
         val t = s"$root/sweep$k"
@@ -72,24 +73,19 @@ object BloomProbeBench {
         }
         plantLegacy(f, t, rels, bits)
         val probes = Seq[Any](42L, "doc-abc")
-        def run(tag: String, budget: String): (Double, Set[String]) = {
-          spark.conf.set("spark.graft.bloom.probe.localOpens", budget)
-          // Pin the adaptive crossover out of the way: the sweep
-          // measures the RAW serial-vs-distributed walls the adaptive
-          // default is tuned FROM.
-          spark.conf.set("spark.graft.bloom.probe.crossoverMs", "1e18")
+        // Pinned routes: the sweep measures the RAW serial-vs-
+        // distributed walls the measured route is tuned FROM.
+        def run(distribute: Boolean): (Double, Set[String]) = FanoutPin(distribute) {
           TxnBloom.clearProbeCaches()
           val t0 = System.nanoTime()
           val kept = TxnBloom.filterByBloom(spark, t, "id", probes, files)
             .map(_._1).toSet
           (((System.nanoTime() - t0) / 1e6), kept)
         }
-        val (serialMs, kS) = run("serial", Int.MaxValue.toString)
-        val (distMs, kD) = run("dist", "0")
-        // The ADAPTIVE default (sample-project-decide) must land near
+        val (serialMs, kS) = run(distribute = false)
+        val (distMs, kD) = run(distribute = true)
+        // The measured route (sample-project-decide) must land near
         // the winner, not the loser, at every point.
-        spark.conf.unset("spark.graft.bloom.probe.localOpens")
-        spark.conf.unset("spark.graft.bloom.probe.crossoverMs")
         TxnBloom.clearProbeCaches()
         val tA = System.nanoTime()
         val kA = TxnBloom.filterByBloom(spark, t, "id", probes, files)
@@ -100,11 +96,7 @@ object BloomProbeBench {
           f"distributed=${distMs}%8.0f ms  adaptive=${adaptiveMs}%8.0f ms  " +
           f"winner=${if (distMs < serialMs) "distributed" else "serial"}")
       }
-    } finally {
-      TxnBloom.testOpenDelayMs = 0L
-      spark.conf.unset("spark.graft.bloom.probe.localOpens")
-      spark.conf.unset("spark.graft.bloom.probe.crossoverMs")
-    }
+    } finally MetaFanout.testOpDelayMs = 0L
   }
 
   def main(args: Array[String]): Unit = {
@@ -141,19 +133,18 @@ object BloomProbeBench {
     }
 
     // (a) r13 design: N per-file sidecars, driver-serial loop. The
-    // adaptive crossover is pinned out of the way for the serial legs
-    // (the bench measures the raw walls the default is tuned from).
+    // route is pinned for the serial and distributed legs (the bench
+    // measures the raw walls the measured route is tuned from).
     val tLegacy = s"$root/legacy"
     plantLegacy(f, tLegacy, rels, bits)
-    spark.conf.set("spark.graft.bloom.probe.localOpens", Int.MaxValue.toString)
-    spark.conf.set("spark.graft.bloom.probe.crossoverMs", "1e18")
+    MetaFanout.testDistribute = Some(false)
     TxnBloom.clearProbeCaches()
     val keptLegacy = timed(s"legacy  $n per-file sidecars, serial driver") {
       TxnBloom.filterByBloom(spark, tLegacy, "id", probes, files)
         .map(_._1).toSet
     }
 
-    // (b) segments, cold, still driver-serial (budget unlimited).
+    // (b) segments, cold, still driver-serial.
     val tSeg = s"$root/seg"
     plantSegments(f, tSeg, rels, 1000, bits)
     TxnBloom.clearProbeCaches()
@@ -162,8 +153,8 @@ object BloomProbeBench {
         .map(_._1).toSet
     }
 
-    // (c) segments, cold, DISTRIBUTED probe (budget 0 → one Spark job).
-    spark.conf.set("spark.graft.bloom.probe.localOpens", "0")
+    // (c) segments, cold, DISTRIBUTED probe (one Spark job).
+    MetaFanout.testDistribute = Some(true)
     TxnBloom.clearProbeCaches()
     val keptSegDist = timed(s"segment ${n / 1000} segments, distributed, cold") {
       TxnBloom.filterByBloom(spark, tSeg, "id", probes, files)
@@ -175,8 +166,7 @@ object BloomProbeBench {
       TxnBloom.filterByBloom(spark, tLegacy, "id", probes, files)
         .map(_._1).toSet
     }
-    spark.conf.unset("spark.graft.bloom.probe.localOpens")
-    spark.conf.unset("spark.graft.bloom.probe.crossoverMs")
+    MetaFanout.testDistribute = None
 
     // (d) warm repeat: the interactive-session steady state.
     val keptWarm = timed("segment warm (driver cache)") {

@@ -1480,6 +1480,39 @@ class GraftSqlDmlSpec extends AnyFunSuite with SparkSpec {
     assert(dml.sql("SELECT id FROM lake.ns.t_pdef")
       .as[Long].collect().toSeq === Seq(2L))
   }
+
+  test("a malformed spark.graft value fails with an error naming its key") {
+    import dml.implicits._
+    val dir = s"$root/ns/t_badconf"
+    TxnLog.createWithBloom(dml, dir, Seq((1L, "a")).toDF("id", "s"), Seq("id"))
+    def append(): Unit = TxnLog.append(dml, dir, Seq((2L, "b")).toDF("id", "s"))
+    // (malformed key, valid companion settings, the read that parses it)
+    val slow = for (side <- Seq("map", "reduce");
+                    k <- Seq("partitions", "sleep.ms", "eachN", "heavy.sleep.ms"))
+      yield (s"spark.graft.slow.$side.$k", Map.empty[String, String],
+        () => if (side == "map") graft.chaos.SlowInject.mapConf(dml)
+              else graft.chaos.SlowInject.reduceConf(dml))
+    val cases: Seq[(String, Map[String, String], () => Any)] = Seq(
+      ("spark.graft.autoCompact.minFiles", Map.empty[String, String], () => append()),
+      ("spark.graft.autoCompact.maxFileBytes",
+        Map("spark.graft.autoCompact.minFiles" -> "1000000"), () => append()),
+      ("spark.graft.write.clusterOnWrite", Map.empty[String, String], () => append()),
+      ("spark.graft.replaceWhere.inSubqueryMaxRows", Map.empty[String, String],
+        () => dml.sql("INSERT INTO lake.ns.t_badconf REPLACE WHERE id IN " +
+          "(SELECT col1 FROM VALUES (1L)) VALUES (1, 'z')").collect()),
+      ("spark.graft.bloom.probe.inSubqueryMaxRows", Map.empty[String, String],
+        () => dml.sql("SELECT * FROM lake.ns.t_badconf WHERE id IN " +
+          "(SELECT col1 FROM VALUES (1L))").collect()),
+      ("spark.graft.vacuum.retainMillis", Map.empty[String, String],
+        () => dml.sql(s"VACUUM '$dir'").collect())) ++ slow
+    cases.foreach { case (key, valid, read) =>
+      val set = valid + (key -> "x")
+      set.foreach { case (k, v) => dml.conf.set(k, v) }
+      val e = try intercept[IllegalArgumentException](read())
+        finally set.keys.foreach(dml.conf.unset)
+      assert(e.getMessage.contains(key), s"$key: ${e.getMessage}")
+    }
+  }
 }
 
 object GraftSqlDmlSpec {

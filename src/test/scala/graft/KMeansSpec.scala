@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.graftbridge.ListenerDrain
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.queries.VectorQueries
@@ -184,18 +182,6 @@ class KMeansSpec extends AnyFunSuite with SparkSpec {
   }
 
   /** Spark jobs submitted while `body` runs. */
-  private def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
-    }
-    ListenerDrain(sc)
-    sc.addSparkListener(l)
-    try { body; ListenerDrain(sc) } finally sc.removeSparkListener(l)
-    n.get
-  }
-
   test("each Lloyd iteration is one Spark job") {
     import org.apache.spark.sql.functions.col
     val iters = 3

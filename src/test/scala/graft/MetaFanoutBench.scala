@@ -11,8 +11,9 @@ import graft.sources.{MetaFanout, TxnLog}
   * existence probe and COPY INTO's source-tree listing. Every
   * metadata op sleeps `delayMs` first (the object-store round-trip
   * model a local FS can't exhibit: ~0.1 ms/op local vs 10–50 ms
-  * real), and the serial-vs-distributed walls are swept over file /
-  * directory counts around the 64-op default budget. Verdict parity
+  * real), and the pinned serial and distributed walls are swept over
+  * file / directory counts next to the measured (unpinned) route,
+  * which should land near the winner at every point. Verdict parity
   * between the legs is asserted, not assumed. */
 object MetaFanoutBench {
 
@@ -35,18 +36,14 @@ object MetaFanoutBench {
         // Lose a couple of files so the probe has real findings.
         val lost = TxnLog.snapshot(spark, t).sorted.take(2)
         lost.foreach(rel => f.delete(new Path(t, rel), false))
-        def run(budget: String): (Double, Seq[String]) = {
-          spark.conf.set("spark.graft.fsck.probe.localOps", budget)
-          spark.conf.set("spark.graft.fsck.probe.crossoverMs", "1e18")
+        def run(distribute: Boolean): (Double, Seq[String]) = FanoutPin(distribute) {
           val t0 = System.nanoTime()
           val miss = TxnLog.fsck(spark, t, dryRun = true)
           ((System.nanoTime() - t0) / 1e6, miss)
         }
         MetaFanout.testOpDelayMs = delayMs
-        val (serialMs, mS) = run(Int.MaxValue.toString)
-        val (distMs, mD) = run("0")
-        spark.conf.unset("spark.graft.fsck.probe.localOps")
-        spark.conf.unset("spark.graft.fsck.probe.crossoverMs")
+        val (serialMs, mS) = run(distribute = false)
+        val (distMs, mD) = run(distribute = true)
         val tA = System.nanoTime()
         val mA = TxnLog.fsck(spark, t, dryRun = true)
         val adaptiveMs = (System.nanoTime() - tA) / 1e6
@@ -63,18 +60,14 @@ object MetaFanoutBench {
         "RESTORE, vacuum, stagedStats) --")
       for (k <- Seq(32, 128, 512)) {
         val t = s"$root/fsck$k" // reuse the FSCK fixture tables
-        def run(budget: String): (Double, Long) = {
-          spark.conf.set("spark.graft.txn.probe.localOps", budget)
-          spark.conf.set("spark.graft.txn.probe.crossoverMs", "1e18")
+        def run(distribute: Boolean): (Double, Long) = FanoutPin(distribute) {
           val t0 = System.nanoTime()
           val n = TxnLog.files(spark, t).where("size_bytes >= 0").count()
           ((System.nanoTime() - t0) / 1e6, n)
         }
         MetaFanout.testOpDelayMs = delayMs
-        val (serialMs, nS) = run(Int.MaxValue.toString)
-        val (distMs, nD) = run("0")
-        spark.conf.unset("spark.graft.txn.probe.localOps")
-        spark.conf.unset("spark.graft.txn.probe.crossoverMs")
+        val (serialMs, nS) = run(distribute = false)
+        val (distMs, nD) = run(distribute = true)
         val tA = System.nanoTime()
         val nA = TxnLog.files(spark, t).where("size_bytes >= 0").count()
         val adaptiveMs = (System.nanoTime() - tA) / 1e6
@@ -95,37 +88,24 @@ object MetaFanoutBench {
         val paths = (0 until n).map(i => new Path(big, f"f$i%05d.bin"))
         paths.foreach { p => val o = f.create(p, true); o.writeBytes("x"); o.close() }
         f.delete(paths(17), false); f.delete(paths(4242), false) // 2 lost
-        def probe(budget: String): (Double, Long) = {
-          spark.conf.set("spark.graft.bench.probe.localOps", budget)
-          spark.conf.set("spark.graft.bench.probe.crossoverMs", "1e18")
-          val t0 = System.nanoTime()
-          val res = MetaFanout.adaptiveMap(spark, paths.map(_.toString),
-            "spark.graft.bench.probe.localOps",
-            "spark.graft.bench.probe.crossoverMs") { (conf, ps) =>
-            MetaFanout.simulatedLatency()
+        def lens(): Seq[(String, Long)] =
+          MetaFanout.adaptiveMap(spark, paths.map(_.toString)) { (conf, ps) =>
             val p = new Path(ps)
             Seq(ps -> (try p.getFileSystem(conf).getFileStatus(p).getLen
               catch { case _: java.io.FileNotFoundException => -1L }))
           }
+        def probe(distribute: Boolean): (Double, Long) = FanoutPin(distribute) {
+          val t0 = System.nanoTime()
+          val res = lens()
           ((System.nanoTime() - t0) / 1e6, res.count(_._2 < 0L))
         }
         MetaFanout.testOpDelayMs = delayMs
-        val (serialMs, mS) = probe(Int.MaxValue.toString)
-        val (distMs, mD) = probe("0")
-        spark.conf.unset("spark.graft.bench.probe.localOps")
-        spark.conf.unset("spark.graft.bench.probe.crossoverMs")
-        // Adaptive with DEFAULT budget/crossover: the measured sample
-        // must route a 10k-file × object-store-latency probe to the
-        // distributed leg on its own.
+        val (serialMs, mS) = probe(distribute = false)
+        val (distMs, mD) = probe(distribute = true)
+        // The measured route: the sample must send a 10k-file ×
+        // object-store-latency probe to the distributed leg on its own.
         val tA = System.nanoTime()
-        val resA = MetaFanout.adaptiveMap(spark, paths.map(_.toString),
-          "spark.graft.bench.probe.localOps",
-          "spark.graft.bench.probe.crossoverMs") { (conf, ps) =>
-          MetaFanout.simulatedLatency()
-          val p = new Path(ps)
-          Seq(ps -> (try p.getFileSystem(conf).getFileStatus(p).getLen
-            catch { case _: java.io.FileNotFoundException => -1L }))
-        }
+        val resA = lens()
         val adaptiveMs = (System.nanoTime() - tA) / 1e6
         val mA = resA.count(_._2 < 0L).toLong
         MetaFanout.testOpDelayMs = 0L
@@ -144,18 +124,14 @@ object MetaFanoutBench {
           val o = f.create(new Path(src, s"day$i/up$j.csv"), true)
           o.writeBytes("id\n1\n"); o.close()
         }
-        def run(budget: String): (Double, Set[String]) = {
-          spark.conf.set("spark.graft.copy.list.localOps", budget)
-          spark.conf.set("spark.graft.copy.list.crossoverMs", "1e18")
+        def run(distribute: Boolean): (Double, Set[String]) = FanoutPin(distribute) {
           val t0 = System.nanoTime()
           val files = TxnLog.listSourceFiles(spark, src, Set(".csv")).toSet
           ((System.nanoTime() - t0) / 1e6, files)
         }
         MetaFanout.testOpDelayMs = delayMs
-        val (serialMs, fS) = run(Int.MaxValue.toString)
-        val (distMs, fD) = run("0")
-        spark.conf.unset("spark.graft.copy.list.localOps")
-        spark.conf.unset("spark.graft.copy.list.crossoverMs")
+        val (serialMs, fS) = run(distribute = false)
+        val (distMs, fD) = run(distribute = true)
         val tA = System.nanoTime()
         val fA = TxnLog.listSourceFiles(spark, src, Set(".csv")).toSet
         val adaptiveMs = (System.nanoTime() - tA) / 1e6
@@ -171,19 +147,15 @@ object MetaFanoutBench {
         "staged file; the write itself is a shared constant per leg) --")
       for (k <- Seq(32, 128)) {
         import spark.implicits._
-        def write(tag: String, budget: Option[String]): (Double, Seq[Long]) = {
+        def write(tag: String, distribute: Option[Boolean]): (Double, Seq[Long]) = {
           val t = s"$root/bloomftr_${k}_$tag"
-          budget.foreach(b =>
-            spark.conf.set("spark.graft.bloom.footer.localOps", b))
-          spark.conf.set("spark.graft.bloom.footer.crossoverMs",
-            if (budget.isDefined) "1e18" else "250")
+          MetaFanout.testDistribute = distribute
           val t0 = System.nanoTime()
-          TxnLog.createWithBloom(spark, t,
+          try TxnLog.createWithBloom(spark, t,
             spark.range(k * 50L).map(i => (i, s"s$i")).toDF("id", "s")
               .repartition(k), Seq("id"))
+          finally MetaFanout.testDistribute = None
           val ms = (System.nanoTime() - t0) / 1e6
-          spark.conf.unset("spark.graft.bloom.footer.localOps")
-          spark.conf.unset("spark.graft.bloom.footer.crossoverMs")
           val kept = graft.sources.TxnBloom.filterByBloom(spark, t, "id",
             Seq(7L, k * 25L), TxnLog.snapshotFull(spark, t))
           val ids = spark.read.parquet(kept.map(r => s"$t/${r._1}"): _*)
@@ -191,8 +163,8 @@ object MetaFanoutBench {
           (ms, ids)
         }
         MetaFanout.testOpDelayMs = delayMs
-        val (serialMs, iS) = write("serial", Some(Int.MaxValue.toString))
-        val (distMs, iD) = write("dist", Some("0"))
+        val (serialMs, iS) = write("serial", Some(false))
+        val (distMs, iD) = write("dist", Some(true))
         val (adaptiveMs, iA) = write("adaptive", None)
         MetaFanout.testOpDelayMs = 0L
         require(iS == iD && iS == iA,

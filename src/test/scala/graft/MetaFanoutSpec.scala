@@ -3,13 +3,14 @@ package graft
 import org.apache.hadoop.fs.Path
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.{MetaFanout, TxnLog}
+import graft.sources.{MetaFanout, TxnBloom, TxnLog}
 
-/** Pins for the adaptive metadata fan-out behind FSCK's existence
-  * probe and COPY INTO's source listing (round-17 optimization): the
-  * serial and distributed legs must return the SAME verdicts — a
-  * crossover that changed answers would be a correctness bug wearing
-  * a performance hat. */
+/** Pins for the adaptive metadata fan-out behind every driver-side
+  * metadata loop: the serial and distributed legs must return the
+  * SAME verdicts — a crossover that changed answers would be a
+  * correctness bug wearing a performance hat — and the measured route
+  * itself must pick the driver on a local FS and one Spark job at
+  * object-store latency. */
 class MetaFanoutSpec extends AnyFunSuite with SparkSpec {
 
   private def root(tag: String): String =
@@ -17,18 +18,11 @@ class MetaFanoutSpec extends AnyFunSuite with SparkSpec {
 
   test("adaptiveMap serial and distributed legs agree (order preserved)") {
     val items = (0 until 500).map(_.toLong)
-    def run(): Seq[Long] = MetaFanout.adaptiveMap(spark, items,
-      "spark.graft.test.fanout.localOps",
-      "spark.graft.test.fanout.crossoverMs") { (_, x) =>
+    def run(): Seq[Long] = MetaFanout.adaptiveMap(spark, items) { (_, x) =>
       if (x % 3 == 0) Nil else Seq(x * 2)
     }
-    spark.conf.set("spark.graft.test.fanout.localOps", Int.MaxValue.toString)
-    spark.conf.set("spark.graft.test.fanout.crossoverMs", "1e18")
-    val serial = run()
-    spark.conf.set("spark.graft.test.fanout.localOps", "0")
-    val dist = run()
-    spark.conf.unset("spark.graft.test.fanout.localOps")
-    spark.conf.unset("spark.graft.test.fanout.crossoverMs")
+    val serial = FanoutPin(distribute = false)(run())
+    val dist = FanoutPin(distribute = true)(run())
     val adaptive = run()
     assert(serial === dist)
     assert(serial === adaptive)
@@ -55,11 +49,8 @@ class MetaFanoutSpec extends AnyFunSuite with SparkSpec {
         .select("id").as[Long].collect().toSeq.sorted
       (t, ids)
     }
-    val (_, serialKept) = build("serial")
-    spark.conf.set("spark.graft.bloom.footer.localOps", "0")
-    val (_, distKept) =
-      try build("dist")
-      finally spark.conf.unset("spark.graft.bloom.footer.localOps")
+    val (_, serialKept) = FanoutPin(distribute = false)(build("serial"))
+    val (_, distKept) = FanoutPin(distribute = true)(build("dist"))
     assert(serialKept === distKept)
   }
 
@@ -76,16 +67,12 @@ class MetaFanoutSpec extends AnyFunSuite with SparkSpec {
       spark.read.parquet(s"$t/$rel").count()).sum
     lost.foreach(rel => assert(fs.delete(new Path(t, rel), false)))
     def dry(): Seq[String] = TxnLog.fsck(spark, t, dryRun = true)
-    val serialSaw = dry()
-    spark.conf.set("spark.graft.fsck.probe.localOps", "0")
-    val distSaw = dry()
-    spark.conf.unset("spark.graft.fsck.probe.localOps")
+    val serialSaw = FanoutPin(distribute = false)(dry())
+    val distSaw = FanoutPin(distribute = true)(dry())
     assert(serialSaw === distSaw)
     assert(serialSaw.sorted === lost)
     // The distributed leg repairs identically.
-    spark.conf.set("spark.graft.fsck.probe.localOps", "0")
-    assert(TxnLog.fsck(spark, t) === distSaw)
-    spark.conf.unset("spark.graft.fsck.probe.localOps")
+    assert(FanoutPin(distribute = true)(TxnLog.fsck(spark, t)) === distSaw)
     assert(TxnLog.read(spark, t).count() === 40L - lostRows)
     fs.delete(p, true)
   }
@@ -106,14 +93,62 @@ class MetaFanoutSpec extends AnyFunSuite with SparkSpec {
     fs.create(new Path(src, "day1/notdata.txt"), true).close()
     def list(): Seq[String] =
       TxnLog.listSourceFiles(spark, src, Set(".csv", ".tsv")).sorted
-    val serial = list()
-    spark.conf.set("spark.graft.copy.list.localOps", "0")
-    val dist = list()
-    spark.conf.unset("spark.graft.copy.list.localOps")
+    val serial = FanoutPin(distribute = false)(list())
+    val dist = FanoutPin(distribute = true)(list())
     assert(serial === dist)
     assert(serial.size === 24)
     assert(serial.forall(_.endsWith(".csv")))
     assert(!serial.exists(_.contains(".hidden")))
     fs.delete(p, true)
+  }
+
+  test("the measured route: cold bloom sources stay on the driver at " +
+       "local latency and fan out as one job at object-store latency") {
+    val t = root("route")
+    val p = new Path(t)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(p)) fs.delete(p, true)
+    // 48 one-entry segments = 48 cold sources. Even files carry an
+    // all-ones bitset (always kept), odd ones all-zeros (always pruned).
+    val rels = (0 until 48).map(i => f"stage-r/part-$i%03d.parquet")
+    rels.zipWithIndex.foreach { case (rel, i) =>
+      TxnBloom.writeSegment(fs, new Path(t, f"_bloom/id/seg-$i%03d.gbs"),
+        Seq((rel, 1L << 10, Array.fill[Byte](128)(if (i % 2 == 0) -1 else 0))))
+    }
+    val files = rels.map(_ -> TxnLog.FileState(None, None))
+    def probe(): Seq[String] = {
+      TxnBloom.clearProbeCaches()
+      TxnBloom.filterByBloom(spark, t, "id", Seq(42L), files).map(_._1)
+    }
+    probe() // warm the code path so the timed sample measures I/O only
+    // The route is measured: a GC pause inside the 8-op sample could
+    // legitimately fan out, so the local leg gets three tries.
+    var local: Seq[String] = Nil
+    assert((1 to 3).exists(_ => jobsDuring { local = probe() } == 0))
+    assert(local === rels.indices.filter(_ % 2 == 0).map(rels))
+    MetaFanout.testOpDelayMs = 50L
+    var remote: Seq[String] = Nil
+    val jobs = try jobsDuring { remote = probe() } finally MetaFanout.testOpDelayMs = 0L
+    assert(jobs === 1)
+    assert(remote.toSet === local.toSet)
+    fs.delete(p, true)
+  }
+
+  test("a retired per-site fan-out key fails loudly, naming itself") {
+    assert(MetaFanout.RetiredKeys.size === 12)
+    MetaFanout.RetiredKeys.foreach { k =>
+      spark.conf.set(k, "0")
+      val e =
+        try intercept[IllegalArgumentException](
+          MetaFanout.adaptiveMap(spark, Seq(1))((_, x) => Seq(x)))
+        finally spark.conf.unset(k)
+      assert(e.getMessage.contains(k) && e.getMessage.contains("retired"))
+    }
+    spark.conf.set("spark.graft.copy.list.localOps", "0")
+    val e =
+      try intercept[IllegalArgumentException](
+        TxnLog.listSourceFiles(spark, root("retired"), Set(".csv")))
+      finally spark.conf.unset("spark.graft.copy.list.localOps")
+    assert(e.getMessage.contains("spark.graft.copy.list.localOps"))
   }
 }

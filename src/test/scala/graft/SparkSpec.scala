@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftbridge.ListenerDrain
 import org.scalatest.{BeforeAndAfterAll, BeforeAndAfterEach}
 import org.scalatest.Suite
 
@@ -11,6 +13,19 @@ trait SparkSpec extends BeforeAndAfterAll with BeforeAndAfterEach { self: Suite 
   lazy val spark: SparkSession = SparkSpec.session
 
   override def afterAll(): Unit = super.afterAll()
+
+  /** Spark jobs submitted while `body` runs. */
+  def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
+    }
+    ListenerDrain(sc)
+    sc.addSparkListener(l)
+    try { body; ListenerDrain(sc) } finally sc.removeSparkListener(l)
+    n.get
+  }
 
   /** Queries that stage intermediates register them in
     * [[graft.queries.StagedCache]]; Bench/Verify release per query, and
