@@ -16,28 +16,4 @@ object JsonUtil {
     case c if c < ' ' => f"\\u${c.toInt}%04x"
     case c => c.toString
   } + "\""
-
-  /** Inverse of [[quote]]'s escaping (input WITHOUT the surrounding
-    * quotes): the log parser's string-stats bounds round-trip. */
-  def unescape(s: String): String = {
-    val b = new StringBuilder(s.length)
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\\' && i + 1 < s.length) {
-        s.charAt(i + 1) match {
-          case '"'  => b += '"'; i += 2
-          case '\\' => b += '\\'; i += 2
-          case 'n'  => b += '\n'; i += 2
-          case 'r'  => b += '\r'; i += 2
-          case 't'  => b += '\t'; i += 2
-          case 'u' if i + 5 < s.length + 1 =>
-            b += Integer.parseInt(s.substring(i + 2, i + 6), 16).toChar
-            i += 6
-          case other => b += other; i += 2
-        }
-      } else { b += c; i += 1 }
-    }
-    b.toString
-  }
 }

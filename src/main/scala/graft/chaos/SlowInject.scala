@@ -53,7 +53,7 @@ object SlowInject {
   private def readConf(spark: SparkSession, side: String): SlowConf = {
     // An empty value reads as unset.
     def get[A](k: String)(parse: String => Option[A]): Option[A] =
-      GraftConf.get(spark, s"spark.graft.slow.$side.$k") { v =>
+      GraftConf.get(spark.sessionState.conf, s"spark.graft.slow.$side.$k") { v =>
         if (v.isEmpty) Some(None) else parse(v).map(Some(_))
       }.flatten
     SlowConf(

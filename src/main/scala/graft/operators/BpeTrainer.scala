@@ -104,14 +104,8 @@ object BpeTrainer {
 
   /** Train `k` merges over a token column; returns the ranked merges
     * and the final (word, cnt, rep) state. Stops early if the corpus
-    * runs out of repeatable pairs.
-    *
-    * `onRound(rank, nanos)` fires after each completed merge round
-    * (the pair-count shuffle + 1-row argmax + re-stage of the merged
-    * state) — the vocab-scale cost-curve hook [[graft.BpeScale]] uses
-    * to prove the per-round driver argmax stays flat at K=256. */
-  def train(tokens: DataFrame, k: Int,
-            onRound: (Int, Long) => Unit = (_, _) => ()): (Seq[Merge], DataFrame) = {
+    * runs out of repeatable pairs. */
+  def train(tokens: DataFrame, k: Int): (Seq[Merge], DataFrame) = {
     // persistTruncated, not persist: each round's state must re-root at
     // a LogicalRDD or the analyzed plan nests the whole merge chain —
     // at K=256 the driver OOMs building plan strings (see StagedCache).
@@ -125,10 +119,6 @@ object BpeTrainer {
     var rank = 1
     var done = false
     while (rank <= k && !done) {
-      // One round's wall time = the pair-count shuffle + 1-row argmax
-      // over the staged state, plus the eager re-stage of the merged
-      // state — the full cost of one round, not just the argmax.
-      val t0 = System.nanoTime()
       val top = topPair(words)
       top match {
         case Some(m) =>
@@ -137,7 +127,6 @@ object BpeTrainer {
           prev.foreach(StagedCache.release(_))
           prev = Some(words)
           words = next
-          onRound(rank, System.nanoTime() - t0)
           rank += 1
         case None => done = true
       }

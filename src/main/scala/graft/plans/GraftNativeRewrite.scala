@@ -63,7 +63,7 @@ object GraftNativeRewrite extends Rule[LogicalPlan] {
   val EnabledKey = "spark.graft.nativeRewrite.enabled"
 
   private def enabled: Boolean =
-    conf.getConfString(EnabledKey, "true").toBoolean
+    graft.GraftConf.get(conf, EnabledKey)(_.toBooleanOption).getOrElse(true)
 
   /** The engine's documented normalize chain:
     * `trim(regexp_replace(regexp_replace(lower(x), "[^a-z0-9 ]", " "),

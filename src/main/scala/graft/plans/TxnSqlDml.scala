@@ -428,7 +428,7 @@ object TxnSqlDml {
       * coercion shows up as a Cast over the ATTRIBUTE and disqualifies
       * there, same as the literal form. */
     private def subqueryValues(exprId: Long, plan: LogicalPlan): Option[Seq[Any]] = {
-      val maxRows = GraftConf.get(spark,
+      val maxRows = GraftConf.get(spark.sessionState.conf,
         "spark.graft.bloom.probe.inSubqueryMaxRows")(_.toIntOption).getOrElse(1000)
       if (maxRows <= 0) return None
       // Memoized per ListQuery exprId: the analyzer's fixpoint
@@ -631,8 +631,9 @@ case class GraftVacuumCommand(dir: String, retainVersions: Int,
     Seq(org.apache.spark.sql.catalyst.expressions.AttributeReference(
       "path", org.apache.spark.sql.types.StringType, nullable = false)())
   override def run(spark: SparkSession): Seq[Row] = {
-    val retainMillis = GraftConf.get(spark, "spark.graft.vacuum.retainMillis")(
-      _.toLongOption).getOrElse(TxnLog.DefaultVacuumRetainMillis)
+    val retainMillis = GraftConf.get(spark.sessionState.conf,
+      "spark.graft.vacuum.retainMillis")(_.toLongOption)
+      .getOrElse(TxnLog.DefaultVacuumRetainMillis)
     TxnLog.vacuum(spark, dir, retainVersions, retainMillis, dryRun)
       .map(Row(_))
   }

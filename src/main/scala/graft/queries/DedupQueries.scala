@@ -127,7 +127,7 @@ object DedupQueries extends QueryModule {
     // between the two measured base-stats points (166 KB / 2.2 MB) —
     // the sf0.1 bench plan stays byte-identical, and a 100 TB corpus
     // (far past any threshold) always stages.
-    val stageBytes = graft.GraftConf.get(base.sparkSession,
+    val stageBytes = graft.GraftConf.get(base.sparkSession.sessionState.conf,
       "spark.graft.dedup.candStageBytes")(_.toLongOption).getOrElse(1L * 1024 * 1024)
     val sampledPlain = graft.operators.SkewGuard.capBuckets(
       base.select(col("doc_id"), explode(col("hs")).as("h"))

@@ -195,7 +195,7 @@ object EventQueries extends QueryModule {
       // between the two measured points — the sf0.1 bench plan stays
       // byte-identical, and a 100 TB events table (far past any
       // threshold) always takes the one-scan path.
-      val stageBytes = graft.GraftConf.get(s,
+      val stageBytes = graft.GraftConf.get(s.sessionState.conf,
         "spark.graft.gapfill.stageBytes")(_.toLongOption).getOrElse(8L * 1024 * 1024)
       val big = ev.queryExecution.optimizedPlan.stats.sizeInBytes >=
         BigInt(stageBytes)

@@ -5,7 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
-import graft.{GraftConf, JsonUtil}
+import graft.GraftConf
 
 /** A versioned transaction log over plain parquet — the minimal ACID
   * table core of the published lakehouse designs (Armbrust et al.,
@@ -40,6 +40,13 @@ import graft.{GraftConf, JsonUtil}
   *    is), not some later read (far from its cause). Additive evolution
   *    is an explicit opt-in (`mergeSchema = true`), recorded in the
   *    evolving commit so replay always knows the current shape.
+  *  - **One codec owns the entry format** ([[TxnCodec]]): each commit
+  *    and checkpoint is a JSON object carrying `"format": 2`, its file
+  *    adds/removes, per-file stats, deletion-vector and clustered-at
+  *    bindings, the optional stream txn marker, COPY INTO ledger and
+  *    schema recording; checkpoints also record every stream's
+  *    high-water mark. Pre-format-2 logs still read, so old tables
+  *    keep working and take new commits.
   *
   * Scale notes for the 100 TB deployment: the log holds FILE paths,
   * not rows — a million-file table is a ~100 MB log tamed to one
@@ -107,80 +114,16 @@ object TxnLog {
                                 retired: Seq[String] = Nil,
                                 constraints: Map[String, String] = Map.empty)
 
-  private def writeJson(f: FileSystem, p: Path, adds: Seq[String],
-                        removes: Seq[String], exclusive: Boolean,
-                        txn: Option[String] = None,
-                        stats: Map[String, FileStats] = Map.empty,
-                        dvs: Map[String, String] = Map.empty,
-                        schema: Option[SchemaCommit] = None,
-                        cls: Map[String, String] = Map.empty,
-                        copied: Seq[String] = Nil): Boolean = {
-    val statsJson =
-      if (stats.isEmpty) ""
-      else ",\"stats\":{" + stats.toSeq.sortBy(_._1).map { case (path, st) =>
-        JsonUtil.quote(path) + ":[" + st.count + ",{" +
-          st.cols.toSeq.sortBy(_._1).map { case (c, cs) =>
-            val bounds =
-              if (cs.isString)
-                JsonUtil.quote(cs.minStr) + "," + JsonUtil.quote(cs.maxStr)
-              else cs.min + "," + cs.max
-            // Null count rides as an optional third element; absent =
-            // unknown (pre-nulls log entries parse identically).
-            val tail = if (cs.nulls >= 0) "," + cs.nulls else ""
-            JsonUtil.quote(c) + ":[" + bounds + tail + "]"
-          }.mkString(",") + "}]"
-      }.mkString(",") + "}"
-    val dvJson =
-      if (dvs.isEmpty) ""
-      else ",\"dvs\":{" + dvs.toSeq.sortBy(_._1).map { case (path, dv) =>
-        JsonUtil.quote(path) + ":" + JsonUtil.quote(dv)
-      }.mkString(",") + "}"
-    // Clustered-at markers ride per file like DV bindings; absent on
-    // pre-marker log entries (parse treats missing as unmarked).
-    val clJson =
-      if (cls.isEmpty) ""
-      else ",\"cl\":{" + cls.toSeq.sortBy(_._1).map { case (path, sig) =>
-        JsonUtil.quote(path) + ":" + JsonUtil.quote(sig)
-      }.mkString(",") + "}"
-    // COPY INTO's ingest ledger: source-file URIs this commit loaded
-    // (newline-joined, base64 for the same JSON-in-JSON reason as the
-    // schema). Replay unions them; checkpoints re-record the FULL
-    // accumulated set, so idempotence survives log cleanup. Ledger
-    // size is ∝ ingested source files — log metadata, never rows.
-    val copiedJson =
-      if (copied.isEmpty) ""
-      else ",\"copied64\":\"" + java.util.Base64.getEncoder.encodeToString(
-        copied.sorted.mkString("\n").getBytes("UTF-8")) + "\""
-    // The schema rides base64-encoded: StructType.json is JSON-in-JSON
-    // and the log's parser is deliberately regex-simple — encoding
-    // sidesteps every escaping corner instead of hand-rolling them.
-    // Recorded FULLY NULLABLE: a column added by evolution reads as
-    // null from pre-evolution files, and the writer-side nullability
-    // of one batch (a non-null literal, say) must never make a log
-    // column "required" — the vectorized reader refuses files missing
-    // a required column, which would brick every evolved table.
-    val schemaJson = schema.fold("") { sc =>
-      val s = ",\"schema64\":\"" + java.util.Base64.getEncoder.encodeToString(
-        nullableSchema(sc.schema).json.getBytes("UTF-8")) + "\""
-      val r =
-        if (sc.retired.isEmpty) s
-        else s + ",\"retired64\":\"" + java.util.Base64.getEncoder
-          .encodeToString(sc.retired.mkString("\n").getBytes("UTF-8")) + "\""
-      // CHECK constraints ride the schema commit the same way: the
-      // full map re-recorded each time, so replay/checkpoints need
-      // only the latest. name\texpr lines, base64 for the same
-      // JSON-in-JSON reason as the schema.
-      if (sc.constraints.isEmpty) r
-      else r + ",\"constraints64\":\"" + java.util.Base64.getEncoder
-        .encodeToString(sc.constraints.toSeq.sorted
-          .map { case (n, e) => s"$n\t$e" }
-          .mkString("\n").getBytes("UTF-8")) + "\""
-    }
-    val body = "{\"adds\":[" + adds.map(JsonUtil.quote).mkString(",") +
-      "],\"removes\":[" + removes.map(JsonUtil.quote).mkString(",") + "]" +
-      txn.fold("")(t => ",\"txn\":" + JsonUtil.quote(t)) + statsJson + dvJson +
-      clJson + copiedJson + schemaJson + "}"
-    val bytes = body.getBytes("UTF-8")
+  /** Publish one log entry ([[TxnCodec]] owns the format). The schema
+    * is recorded FULLY NULLABLE: a column added by evolution reads as
+    * null from pre-evolution files, and the writer-side nullability of
+    * one batch (a non-null literal, say) must never make a log column
+    * "required" — the vectorized reader refuses files missing a
+    * required column, which would brick every evolved table. */
+  private def writeEntry(f: FileSystem, p: Path, e: TxnCodec.Entry,
+                         exclusive: Boolean): Boolean = {
+    val bytes = TxnCodec.encode(e.copy(schema =
+      e.schema.map(sc => sc.copy(schema = nullableSchema(sc.schema)))))
     if (exclusive && f.makeQualified(p).toUri.getScheme == "file") {
       // Hadoop's LocalFileSystem create(overwrite=false) is a
       // check-then-act (and silently truncates if it loses the check
@@ -201,87 +144,9 @@ object TxnLog {
     true
   }
 
-  private def readBody(f: FileSystem, p: Path): String = {
+  private def readEntry(f: FileSystem, p: Path): TxnCodec.Entry = {
     val in = f.open(p)
-    try {
-      val buf = new java.io.ByteArrayOutputStream()
-      val chunk = new Array[Byte](8192)
-      var n = in.read(chunk)
-      while (n > 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-      buf.toString("UTF-8")
-    } finally in.close()
-  }
-
-  private def parseArr(body: String, key: String): Seq[String] = {
-    val i = body.indexOf("\"" + key + "\":[")
-    val start = i + key.length + 4
-    val end = body.indexOf("]", start)
-    val inner = body.substring(start, end)
-    if (inner.isEmpty) Seq.empty
-    else inner.split(",").toSeq.map(s => s.trim.stripPrefix("\"").stripSuffix("\""))
-  }
-
-  /** The balanced `{…}` starting at `open` (which must point at `{`),
-    * string- and escape-aware — stats objects nest per-column objects,
-    * so a bare indexOf("}") would truncate them. */
-  private def balancedObject(body: String, open: Int): String = {
-    var i = open; var depth = 0; var inStr = false; var esc = false
-    while (i < body.length) {
-      val c = body.charAt(i)
-      if (esc) esc = false
-      else if (inStr) { if (c == '\\') esc = true else if (c == '"') inStr = false }
-      else c match {
-        case '"' => inStr = true
-        case '{' => depth += 1
-        case '}' =>
-          depth -= 1
-          if (depth == 0) return body.substring(open, i + 1)
-        case _ =>
-      }
-      i += 1
-    }
-    throw new IllegalStateException("unterminated JSON object in log entry")
-  }
-
-  // One file's stats: "path":[count,{"col":[min,max],…}] — bounds are
-  // bare longs (numeric-canonical columns) or quoted strings.
-  private val FileStatsEntry = """"([^"]+)":\[(\d+),\{""".r
-  private val ColStatsEntry =
-    """"([^"]+)":\[(-?\d+),(-?\d+)(?:,(-?\d+))?\]""".r
-  private val StrStatsEntry =
-    """"([^"]+)":\["((?:[^"\\]|\\.)*)","((?:[^"\\]|\\.)*)"(?:,(-?\d+))?\]""".r
-
-  private def parseStats(body: String): Map[String, FileStats] = {
-    val i = body.indexOf("\"stats\":{")
-    if (i < 0) return Map.empty
-    val obj = balancedObject(body, i + 8)
-    FileStatsEntry.findAllMatchIn(obj).map { m =>
-      val colsObj = balancedObject(obj, m.end - 1)
-      def nl(g: String): Long = if (g == null) -1L else g.toLong
-      val longs = ColStatsEntry.findAllMatchIn(colsObj).map(cm =>
-        cm.group(1) -> ColStats(cm.group(2).toLong, cm.group(3).toLong,
-          nulls = nl(cm.group(4))))
-      val strs = StrStatsEntry.findAllMatchIn(colsObj).map(cm =>
-        cm.group(1) -> ColStats(0L, 0L, JsonUtil.unescape(cm.group(2)),
-          JsonUtil.unescape(cm.group(3)), nulls = nl(cm.group(4))))
-      m.group(1) -> FileStats(m.group(2).toLong, (longs ++ strs).toMap)
-    }.toMap
-  }
-
-  private val DvEntry = """"([^"]+)":"([^"]+)"""".r
-
-  private def parseDvs(body: String): Map[String, String] = {
-    val i = body.indexOf("\"dvs\":{")
-    if (i < 0) return Map.empty
-    DvEntry.findAllMatchIn(balancedObject(body, i + 6))
-      .map(m => m.group(1) -> m.group(2)).toMap
-  }
-
-  private def parseCls(body: String): Map[String, String] = {
-    val i = body.indexOf("\"cl\":{")
-    if (i < 0) return Map.empty
-    DvEntry.findAllMatchIn(balancedObject(body, i + 5))
-      .map(m => m.group(1) -> m.group(2)).toMap
+    try TxnCodec.decode(in.readAllBytes()) finally in.close()
   }
 
   /** Deep-nullable normalization for the log-recorded schema. */
@@ -299,71 +164,22 @@ object TxnLog {
     case other => other
   }
 
-  private val Schema64 = """"schema64":"([A-Za-z0-9+/=]+)"""".r
-  private val Retired64 = """"retired64":"([A-Za-z0-9+/=]+)"""".r
-  private val Constraints64 = """"constraints64":"([A-Za-z0-9+/=]+)"""".r
-  private val Copied64 = """"copied64":"([A-Za-z0-9+/=]+)"""".r
-
-  private def parseCopied(body: String): Seq[String] =
-    Copied64.findFirstMatchIn(body).toSeq.flatMap(m =>
-      new String(java.util.Base64.getDecoder.decode(m.group(1)), "UTF-8")
-        .split("\n").toSeq.filter(_.nonEmpty))
-
   /** The accumulated COPY INTO ingest ledger at `version` (default
     * latest): every source-file URI any copy commit at-or-before it
-    * loaded. Replays the newest checkpoint's full recording plus the
-    * commit tail's deltas — the same O(checkpoint + tail) resolution
-    * as [[snapshot]], read ONLY by COPY INTO itself (normal reads
-    * never pay for it). */
+    * loaded. It rides the snapshot's own checkpoint-plus-tail
+    * [[replay]]; checkpoints re-record the FULL accumulated set, so
+    * idempotence survives log cleanup. Ledger size is ∝ ingested
+    * source files — log metadata, never rows. */
   def ingestLedger(spark: SparkSession, table: String,
-      version: Option[Long] = None): Set[String] = {
-    val f = fs(spark, logDir(table))
-    val versions = listVersions(f, table, "v")
-    if (versions.isEmpty) return Set.empty
-    val v = version.getOrElse(versions.last)
-    val ckpt = listVersions(f, table, "c").filter(_ <= v).lastOption
-    val acc = scala.collection.mutable.HashSet.empty[String]
-    ckpt.foreach(cv =>
-      acc ++= parseCopied(readBody(f, checkpointFile(table, cv))))
-    versions.filter(tv => tv <= v && ckpt.forall(tv > _))
-      .foreach(tv => acc ++= parseCopied(readBody(f, versionFile(table, tv))))
-    acc.toSet
-  }
-
-  private def parseSchema(body: String): Option[SchemaCommit] =
-    Schema64.findFirstMatchIn(body).map { m =>
-      val s = DataType.fromJson(
-        new String(java.util.Base64.getDecoder.decode(m.group(1)), "UTF-8"))
-        .asInstanceOf[StructType]
-      val retired = Retired64.findFirstMatchIn(body).toSeq.flatMap(r =>
-        new String(java.util.Base64.getDecoder.decode(r.group(1)), "UTF-8")
-          .split("\n").toSeq.filter(_.nonEmpty))
-      val constraints = Constraints64.findFirstMatchIn(body).toSeq.flatMap(c =>
-        new String(java.util.Base64.getDecoder.decode(c.group(1)), "UTF-8")
-          .split("\n").toSeq.filter(_.contains("\t")).map { line =>
-            val i = line.indexOf('\t')
-            line.substring(0, i) -> line.substring(i + 1)
-          }).toMap
-      SchemaCommit(s, retired, constraints)
-    }
-
-  private def readTxn(f: FileSystem, p: Path): Option[String] = {
-    val body = readBody(f, p)
-    val i = body.indexOf("\"txn\":\"")
-    if (i < 0) None
-    else {
-      val start = i + 7
-      Some(body.substring(start, body.indexOf("\"", start)))
-    }
-  }
+      version: Option[Long] = None): Set[String] =
+    if (latestVersion(spark, table) < 0) Set.empty
+    else replay(spark, table, version).copied.map(_._1).toSet
 
   /** One commit's entry, publicly readable — the incremental-consumer
     * API ([[graft.sources.TxnStreamProvider]] tails the log with it). */
   def commit(spark: SparkSession, table: String, version: Long): Commit = {
-    val f = fs(spark, logDir(table))
-    val body = readBody(f, versionFile(table, version))
-    Commit(version, parseArr(body, "adds"), parseArr(body, "removes"),
-      parseDvs(body))
+    val e = readEntry(fs(spark, logDir(table)), versionFile(table, version))
+    Commit(version, e.adds, e.removes, e.dvs)
   }
 
   private def listVersions(f: FileSystem, table: String, prefix: String): Seq[Long] = {
@@ -453,10 +269,9 @@ object TxnLog {
     // "bounded" cache (round-17 advice).
     private val maxApproxBytes = 64L * 1024 * 1024
     private var bytes = 0L
-    private val map = new java.util.LinkedHashMap[String,
-      (Seq[(String, FileState)], Option[SchemaCommit])](16, 0.75f, true)
-    private def weigh(v: (Seq[(String, FileState)], Option[SchemaCommit])): Long =
-      v._1.iterator.map { case (p, st) =>
+    private val map = new java.util.LinkedHashMap[String, Replayed](16, 0.75f, true)
+    private def weigh(v: Replayed): Long =
+      v.files.iterator.map { case (p, st) =>
         64L + 2L * p.length +
           st.stats.fold(0L)(fs => fs.cols.iterator.map { case (c, cs) =>
             80L + 2L * c.length +
@@ -465,10 +280,10 @@ object TxnLog {
           }.sum) +
           st.dv.fold(0L)(d => 2L * d.length) +
           st.cl.fold(0L)(c => 2L * c.length)
-      }.sum + v._2.fold(0L)(sc => 256L * math.max(1, sc.schema.fields.length))
-    def get(k: String): Option[(Seq[(String, FileState)], Option[SchemaCommit])] =
-      synchronized(Option(map.get(k)))
-    def put(k: String, v: (Seq[(String, FileState)], Option[SchemaCommit])): Unit =
+      }.sum + v.schema.fold(0L)(sc => 256L * math.max(1, sc.schema.fields.length)) +
+        v.copied.iterator.map(c => 64L + 2L * c._1.length).sum
+    def get(k: String): Option[Replayed] = synchronized(Option(map.get(k)))
+    def put(k: String, v: Replayed): Unit =
       synchronized {
         if (!map.containsKey(k)) {
           map.put(k, v)
@@ -507,8 +322,45 @@ object TxnLog {
   /** Test hook: drop the snapshot cache (cold-path measurements). */
   private[graft] def clearResolveCache(): Unit = ResolveCache.clear()
 
+  /** One checkpoint-plus-tail replay: the live files, the latest schema
+    * recording, the COPY INTO ledger (each source URI with the version
+    * that loaded it; URIs a checkpoint folds report the checkpoint's
+    * version), and each stream's committed high-water mark.
+    * `unmarked` names a checkpoint written before format 2, which
+    * records no stream marks (see [[streamMarks]]). */
+  private final case class Replayed(files: Seq[(String, FileState)],
+                                    schema: Option[SchemaCommit],
+                                    copied: Seq[(String, Long)],
+                                    streams: Map[String, Long],
+                                    unmarked: Option[Long])
+
   private def resolve(spark: SparkSession, table: String,
       version: Option[Long]): (Seq[(String, FileState)], Option[SchemaCommit]) = {
+    val r = replay(spark, table, version)
+    (r.files, r.schema)
+  }
+
+  /** `streamId:batchId` → (streamId, batchId). A stream's batch ids
+    * only grow along the log ([[appendBatch]] refuses a batch at or
+    * below the mark), so the latest marker is the high-water mark. */
+  private def streamMark(txn: String): Option[(String, Long)] = {
+    val i = txn.lastIndexOf(':')
+    if (i < 0) None else txn.substring(i + 1).toLongOption.map(txn.substring(0, i) -> _)
+  }
+
+  /** Every stream's committed high-water mark in `r`. A checkpoint
+    * written before format 2 records none, so the version files it
+    * folds are read for their txn markers, where they survive. */
+  private def streamMarks(spark: SparkSession, table: String,
+                          r: Replayed): Map[String, Long] =
+    r.unmarked.fold(r.streams) { cv =>
+      val f = fs(spark, logDir(table))
+      listVersions(f, table, "v").filter(_ <= cv).flatMap(v =>
+        readEntry(f, versionFile(table, v)).txn.flatMap(streamMark)).toMap ++ r.streams
+    }
+
+  private def replay(spark: SparkSession, table: String,
+      version: Option[Long]): Replayed = {
     val f = fs(spark, logDir(table))
     val dir = logDir(table)
     // ONE listing serves version discovery, checkpoint discovery, and
@@ -549,34 +401,40 @@ object TxnLog {
     }
     val live = scala.collection.mutable.LinkedHashMap.empty[String, FileState]
     var schema: Option[SchemaCommit] = None
+    val copied = scala.collection.mutable.LinkedHashMap.empty[String, Long]
+    var streams = Map.empty[String, Long]
+    var unmarked: Option[Long] = None
     // Seed from the longest cached prefix of the same chain: immutable
     // files make "cached state at w" + "apply (w, v]" ≡ full replay.
     var seeded = -1L
     tail.filter(_ < v).reverse.take(16).find { w =>
       ResolveCache.get(keyAt(w)) match {
-        case Some((fseq, sc)) =>
-          fseq.foreach(live += _); schema = sc; seeded = w; true
+        case Some(r) =>
+          r.files.foreach(live += _); schema = r.schema; copied ++= r.copied
+          streams = r.streams; unmarked = r.unmarked; seeded = w; true
         case None => false
       }
     }
-    def apply(body: String): Unit = {
-      val st = parseStats(body)
-      val dv = parseDvs(body)
-      val cl = parseCls(body)
-      parseArr(body, "removes").foreach(live -= _)
-      parseArr(body, "adds").foreach(p =>
-        live += p -> FileState(st.get(p), dv.get(p), cl.get(p)))
+    def apply(e: TxnCodec.Entry, at: Long): Unit = {
+      e.removes.foreach(live -= _)
+      e.adds.foreach(p =>
+        live += p -> FileState(e.stats.get(p), e.dvs.get(p), e.cls.get(p)))
       // DV re-bindings of files that stay live (not in this commit's adds).
-      dv.foreach { case (p, d) =>
+      e.dvs.foreach { case (p, d) =>
         live.get(p).foreach(s => live += p -> s.copy(dv = Some(d)))
       }
-      parseSchema(body).foreach(s => schema = Some(s))
+      e.schema.foreach(s => schema = Some(s))
+      e.copied.foreach(copied.getOrElseUpdate(_, at))
+      streams = streams ++ e.streams.getOrElse(Map.empty) ++ e.txn.flatMap(streamMark)
     }
-    if (seeded < 0)
-      ckpt.foreach(cv => apply(readBody(f, checkpointFile(table, cv))))
+    if (seeded < 0) ckpt.foreach { cv =>
+      val e = readEntry(f, checkpointFile(table, cv))
+      if (e.streams.isEmpty) unmarked = Some(cv)
+      apply(e, cv)
+    }
     tail.filter(_ > seeded).foreach(tv =>
-      apply(readBody(f, versionFile(table, tv))))
-    val out = (live.toSeq, schema)
+      apply(readEntry(f, versionFile(table, tv)), tv))
+    val out = Replayed(live.toSeq, schema, copied.toSeq, streams, unmarked)
     ResolveCache.put(key, out)
     out
   }
@@ -1156,7 +1014,8 @@ object TxnLog {
     // to stamp clustered-at markers) must not be re-scattered; AQE
     // still right-sizes the range partitions, so nothing is lost.
     val shaped =
-      if (spark.conf.getOption("spark.graft.write.rebalance").contains("true")
+      if (GraftConf.get(spark.sessionState.conf, "spark.graft.write.rebalance")(
+            _.toBooleanOption).contains(true)
           && !preserveShape && !clusterWriteApplies(spark, mapping, df))
         guarded.hint("REBALANCE")
       else guarded
@@ -1251,8 +1110,8 @@ object TxnLog {
       attempt(next) match {
         case None => return None
         case Some((a, r)) =>
-          if (writeJson(f, versionFile(table, next), a, r, exclusive = true, txn,
-              stats, dvs, schema, cls, copied)) {
+          if (writeEntry(f, versionFile(table, next), TxnCodec.Entry(a, r, txn,
+              stats, dvs, cls, copied, schema), exclusive = true)) {
             // A fresh v0 at this path means any cached snapshot belongs
             // to a previous incarnation (drop + recreate): invalidate
             // so a same-mtime-granule recreate can never serve stale
@@ -1266,19 +1125,18 @@ object TxnLog {
               // are intact. Write to a temp name, then move into
               // place (atomic on local/HDFS; the checkpoint is pure
               // optimization, so a crash before the rename just means
-              // replay walks a longer tail).
-              val (full, sch) = resolve(spark, table, Some(next))
+              // replay walks a longer tail). One replay yields the
+              // files, schema, ingest ledger and stream marks.
+              val st = replay(spark, table, Some(next))
               val tmp = new Path(logDir(table), f"c$next%08d.json.tmp")
-              writeJson(f, tmp, full.map(_._1), Nil,
-                exclusive = false,
-                stats = full.collect {
-                  case (p, st) if st.stats.isDefined => p -> st.stats.get }.toMap,
-                dvs = full.collect {
-                  case (p, st) if st.dv.isDefined => p -> st.dv.get }.toMap,
-                schema = sch,
-                cls = full.collect {
-                  case (p, st) if st.cl.isDefined => p -> st.cl.get }.toMap,
-                copied = ingestLedger(spark, table, Some(next)).toSeq.sorted)
+              writeEntry(f, tmp, TxnCodec.Entry(
+                adds = st.files.map(_._1),
+                stats = st.files.flatMap { case (p, s) => s.stats.map(p -> _) }.toMap,
+                dvs = st.files.flatMap { case (p, s) => s.dv.map(p -> _) }.toMap,
+                cls = st.files.flatMap { case (p, s) => s.cl.map(p -> _) }.toMap,
+                copied = st.copied.map(_._1).sorted,
+                schema = st.schema,
+                streams = Some(streamMarks(spark, table, st))), exclusive = false)
               f.rename(tmp, checkpointFile(table, next))
             }
             return Some(CommitResult(next, a.size, r.size))
@@ -1604,7 +1462,7 @@ object TxnLog {
       Literal, SubqueryExpression}
     val e = Bridge.catalystExpression(predicate)
     if (!e.exists(_.isInstanceOf[SubqueryExpression])) return predicate
-    val cap = GraftConf.get(spark,
+    val cap = GraftConf.get(spark.sessionState.conf,
       "spark.graft.replaceWhere.inSubqueryMaxRows")(_.toIntOption).getOrElse(100000)
     val out = e.transform {
       case InSubquery(values, lq) =>
@@ -2717,7 +2575,8 @@ object TxnLog {
   private def clusterWriteApplies(spark: SparkSession,
       schema: Option[StructType], df: DataFrame): Boolean = {
     val keys = schema.map(clusterColumns).getOrElse(Nil)
-    GraftConf.get(spark, ClusterOnWriteConf)(_.toBooleanOption).contains(true) &&
+    GraftConf.get(spark.sessionState.conf, ClusterOnWriteConf)(
+      _.toBooleanOption).contains(true) &&
       keys.nonEmpty &&
       keys.forall(k => df.columns.exists(_.equalsIgnoreCase(k)))
   }
@@ -3408,9 +3267,9 @@ object TxnLog {
     * probe window just leaves the work for the next write (the
     * caller's commit already published; round-13 advice, low). */
   private def maybeAutoCompact(spark: SparkSession, table: String): Unit =
-    GraftConf.get(spark, "spark.graft.autoCompact.minFiles")(_.toIntOption)
+    GraftConf.get(spark.sessionState.conf, "spark.graft.autoCompact.minFiles")(_.toIntOption)
       .foreach { minFiles =>
-      val maxBytes = GraftConf.get(spark,
+      val maxBytes = GraftConf.get(spark.sessionState.conf,
         "spark.graft.autoCompact.maxFileBytes")(_.toLongOption).getOrElse(32L << 20)
       val sizes = probeLens(spark, table, snapshot(spark, table))
         .map(_._2).filter(l => l >= 0 && l < maxBytes)
@@ -3421,19 +3280,13 @@ object TxnLog {
     }
 
   /** The stream's committed high-water mark: max batchId across every
-    * commit carrying this stream's txn marker. */
+    * commit carrying this stream's txn marker. Checkpoints record every
+    * stream's mark, so this is the snapshot's own checkpoint-plus-tail
+    * [[replay]] (a cache hit on a warm table) and survives log cleanup. */
   def lastCommittedBatch(spark: SparkSession, table: String,
-                         streamId: String): Option[Long] = {
-    val f = fs(spark, logDir(table))
-    val ids = listVersions(f, table, "v").flatMap { v =>
-      readTxn(f, versionFile(table, v)) match {
-        case Some(t) if t.startsWith(streamId + ":") =>
-          Some(t.stripPrefix(streamId + ":").toLong)
-        case _ => None
-      }
-    }
-    if (ids.isEmpty) None else Some(ids.max)
-  }
+                         streamId: String): Option[Long] =
+    if (latestVersion(spark, table) < 0) None
+    else streamMarks(spark, table, replay(spark, table, None)).get(streamId)
 
   /** Replace the whole table content with `df` in one atomic commit.
     * Removes are recomputed against the CURRENT snapshot on every
@@ -4628,18 +4481,7 @@ object TxnLog {
   def ingests(spark: SparkSession, table: String,
               version: Option[Long] = None): DataFrame = {
     import spark.implicits._
-    val f = fs(spark, logDir(table))
-    val versions = listVersions(f, table, "v")
-    require(versions.nonEmpty, s"not a TxnLog table: $table")
-    val v = version.getOrElse(versions.last)
-    val ckpt = listVersions(f, table, "c").filter(_ <= v).lastOption
-    val acc = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-    ckpt.foreach(cv => parseCopied(readBody(f, checkpointFile(table, cv)))
-      .foreach(p => acc.getOrElseUpdate(p, cv)))
-    versions.filter(tv => tv <= v && ckpt.forall(tv > _))
-      .foreach(tv => parseCopied(readBody(f, versionFile(table, tv)))
-        .foreach(p => acc.getOrElseUpdate(p, tv)))
-    acc.toSeq.toDF("source_file", "loaded_at_version")
+    replay(spark, table, version).copied.toDF("source_file", "loaded_at_version")
   }
 
   /** Parsed history rows keyed by each version file's EXACT identity
@@ -4684,25 +4526,18 @@ object TxnLog {
         val v = name.stripPrefix("v").stripSuffix(".json").toLong
         val key = s"$table|$name@${st.getModificationTime}:${st.getLen}"
         HistoryCache.get(key).getOrElse {
-          val body = readBody(f, st.getPath)
-          val (adds, removes) = (parseArr(body, "adds"), parseArr(body, "removes"))
-          val dvs = parseDvs(body)
-          val txn = {
-            val i = body.indexOf("\"txn\":\"")
-            if (i < 0) None
-            else Some(body.substring(i + 7, body.indexOf("\"", i + 7)))
-          }
+          val e = readEntry(f, st.getPath)
           val op =
             if (v == 0) "CREATE"
-            else if (txn.isDefined) "STREAMING APPEND"
-            else if (dvs.nonEmpty && adds.nonEmpty) "UPDATE (merge-on-read)"
-            else if (dvs.nonEmpty) "DELETE (merge-on-read)"
-            else if (adds.nonEmpty && removes.nonEmpty) "REWRITE (merge/compact/delete)"
-            else if (removes.nonEmpty) "REMOVE"
-            else if (adds.isEmpty && body.contains("\"schema64\":")) "EVOLVE SCHEMA"
+            else if (e.txn.isDefined) "STREAMING APPEND"
+            else if (e.dvs.nonEmpty && e.adds.nonEmpty) "UPDATE (merge-on-read)"
+            else if (e.dvs.nonEmpty) "DELETE (merge-on-read)"
+            else if (e.adds.nonEmpty && e.removes.nonEmpty) "REWRITE (merge/compact/delete)"
+            else if (e.removes.nonEmpty) "REMOVE"
+            else if (e.adds.isEmpty && e.schema.isDefined) "EVOLVE SCHEMA"
             else "APPEND"
-          val row = (v, st.getModificationTime, op, adds.size.toLong,
-            removes.size.toLong, dvs.size.toLong, txn.orNull)
+          val row = (v, st.getModificationTime, op, e.adds.size.toLong,
+            e.removes.size.toLong, e.dvs.size.toLong, e.txn.orNull)
           HistoryCache.put(key, row)
           row
         }

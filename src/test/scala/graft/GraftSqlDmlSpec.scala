@@ -1504,7 +1504,10 @@ class GraftSqlDmlSpec extends AnyFunSuite with SparkSpec {
         () => dml.sql("SELECT * FROM lake.ns.t_badconf WHERE id IN " +
           "(SELECT col1 FROM VALUES (1L))").collect()),
       ("spark.graft.vacuum.retainMillis", Map.empty[String, String],
-        () => dml.sql(s"VACUUM '$dir'").collect())) ++ slow
+        () => dml.sql(s"VACUUM '$dir'").collect()),
+      ("spark.graft.write.rebalance", Map.empty[String, String], () => append()),
+      ("spark.graft.nativeRewrite.enabled", Map.empty[String, String],
+        () => dml.sql("SELECT md5('a')").collect())) ++ slow
     cases.foreach { case (key, valid, read) =>
       val set = valid + (key -> "x")
       set.foreach { case (k, v) => dml.conf.set(k, v) }

@@ -108,6 +108,22 @@ class LogCleanupSpec extends AnyFunSuite with SparkSpec {
     } finally q2.stop()
   }
 
+  test("exactly-once survives cleanup: checkpoints carry stream marks, " +
+       "so a replayed batch is refused after its version file is gone") {
+    import spark.implicits._
+    val t = freshTable("streammark")
+    TxnLog.create(spark, t, Seq((0L, "r0")).toDF("id", "s"))
+    val batch = Seq((100L, "b0")).toDF("id", "s")
+    assert(TxnLog.appendBatch(spark, t, batch, "sink", 0).isDefined)
+    (1L to 20L).foreach(i =>
+      TxnLog.append(spark, t, Seq((i, s"r$i")).toDF("id", "s")))
+    assert(TxnLog.cleanupLog(spark, t, retainVersions = 5)
+      .contains("v00000001.json"), "the marker's version file must retire")
+    assert(TxnLog.lastCommittedBatch(spark, t, "sink").contains(0L))
+    assert(TxnLog.appendBatch(spark, t, batch, "sink", 0).isEmpty)
+    assert(TxnLog.read(spark, t).filter(col("id") === 100L).count() === 1L)
+  }
+
   test("no checkpoint at-or-below the retention floor: cleanup is a " +
        "no-op rather than breaking a retained replay") {
     import spark.implicits._

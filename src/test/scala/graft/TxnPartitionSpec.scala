@@ -159,6 +159,18 @@ class TxnPartitionSpec extends AnyFunSuite with SparkSpec {
     assert(TxnLog.read(spark, t).count() === 3L)
   }
 
+  test("a comma in a partition value survives the log: both rows read " +
+       "back and the value prunes exactly") {
+    import spark.implicits._
+    val t = freshTable("comma")
+    TxnLog.createPartitioned(spark, t,
+      Seq(("a,b", 1L), ("c", 2L)).toDF("city", "x"), Seq("city"))
+    assert(TxnLog.read(spark, t).select("city", "x").as[(String, Long)]
+      .collect().toSet === Set(("a,b", 1L), ("c", 2L)))
+    assert(TxnLog.readPrunedPartition(spark, t, "city", Seq("a,b"))
+      .count() === 1L)
+  }
+
   test("integral partition columns prune numerically and round-trip " +
        "their type") {
     import spark.implicits._
