@@ -60,6 +60,11 @@ object GraftSession {
       .config("spark.sql.catalog.graft.root",
         sys.env.getOrElse("SPARK_GRAFT_CATALOG_ROOT", "/root/testdata"))
       .config("spark.ui.enabled", "false")
+      // Hadoop's stock local file system forks `ls -ld` per permission
+      // read and `chmod` per file create: one process start per lake
+      // file written or listed (see ForkFreeLocalFileSystem).
+      .config("spark.hadoop.fs.file.impl",
+        classOf[graft.sources.ForkFreeLocalFileSystem].getName)
 
   def getOrCreate(appName: String = "graft"): SparkSession = {
     val spark = builder(appName).getOrCreate()

@@ -7,6 +7,8 @@ import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.functions.PerFileExpr
+
 /** Per-FILE Bloom filters for the transaction log — the point-lookup
   * data-skipping index min/max stats cannot provide.
   *
@@ -237,16 +239,14 @@ object TxnBloom {
         Seq(rel -> mBitsFor(footerRows(conf, table, rel)))
       }.toMap
     val absolute = staged.map(rel => new Path(table, rel).toString)
-    // Table-relative path by QUALIFIED-prefix strip (the same contract
-    // as the DV mask keys): input_file_name() reports the Path-URI
-    // string form, and a fixed segment-count regex would mis-key
-    // adopted files living at the table ROOT (one segment) vs staged
-    // files (stage-x/part-y, two).
-    val pfx = fs(spark, new Path(table))
-      .makeQualified(new Path(table)).toUri.toString + "/"
-    val relC = when(input_file_name().startsWith(pfx),
-      input_file_name().substr(lit(pfx.length + 1), lit(1 << 20)))
-      .otherwise(raise_error(concat(
+    // Table-relative path by QUALIFIED-prefix strip (the same key as
+    // the DV mask keys), once per file: a fixed segment-count regex
+    // would mis-key adopted files living at the table ROOT (one
+    // segment) vs staged files (stage-x/part-y, two).
+    val pfx = TxnLog.encodedTablePrefix(spark, table) + "/"
+    val relC = coalesce(
+      PerFileExpr.column(PerFileExpr.relativeTo(pfx)),
+      raise_error(concat(
         lit(s"bloom build: scan file outside table $table: "),
         input_file_name())))
     val u = udaf(BloomOrAgg, Encoders.product[BloomIn])

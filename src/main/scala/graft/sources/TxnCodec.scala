@@ -23,7 +23,7 @@ import graft.sources.TxnLog.{ColStats, FileStats, SchemaCommit}
   *  "dvs":{"<path>":"<dv dir>"}, "cl":{"<path>":"<cluster signature>"},
   *  "copied":["<source uri>", …],
   *  "schema":{…StructType JSON…}, "retired":[…], "constraints":{"<name>":"<expr>"},
-  *  "streams":{"<streamId>":maxBatchId}}
+  *  "streams":{"<streamId>":maxBatchId}, "ts":commitMillis}
   * }}}
   *
   * Every field but `adds` and `removes` is optional and omitted when
@@ -31,7 +31,9 @@ import graft.sources.TxnLog.{ColStats, FileStats, SchemaCommit}
   * strings for string columns; a missing third element means the null
   * count is unknown. `streams` appears only in checkpoints, which
   * carry each stream's high-water mark so exactly-once replay survives
-  * log cleanup.
+  * log cleanup. `ts` is a version file's commit time (epoch millis,
+  * the writer's clock); entries written before it existed fall back
+  * to the file's mtime ([[TxnLog.history]]).
   *
   * Entries without `format` are the first log format: the same
   * layout, except that the schema, retired names, constraints and the
@@ -44,7 +46,8 @@ object TxnCodec {
   val Format = 2
 
   /** One decoded log entry. `streams` is None for version files and
-    * for checkpoints written before format 2. */
+    * for checkpoints written before format 2; `ts` is None for
+    * checkpoints and for version files written before it existed. */
   final case class Entry(adds: Seq[String] = Nil,
                          removes: Seq[String] = Nil,
                          txn: Option[String] = None,
@@ -53,7 +56,8 @@ object TxnCodec {
                          cls: Map[String, String] = Map.empty,
                          copied: Seq[String] = Nil,
                          schema: Option[SchemaCommit] = None,
-                         streams: Option[Map[String, Long]] = None)
+                         streams: Option[Map[String, Long]] = None,
+                         ts: Option[Long] = None)
 
   // No cap on one string's length: a first-format checkpoint holds the
   // whole COPY INTO ledger as one base64 string, which passes Jackson's
@@ -94,6 +98,7 @@ object TxnCodec {
       val s = root.putObject("streams")
       m.toSeq.sorted.foreach { case (id, b) => s.put(id, b) }
     }
+    e.ts.foreach(root.put("ts", _))
     mapper.writeValueAsBytes(root)
   }
 
@@ -132,7 +137,8 @@ object TxnCodec {
         legacy64(root, "copied64").toSeq.flatMap(lines))(texts),
       schema = schema,
       streams = Option(root.get("streams")).map(n =>
-        fields(n).map { case (id, b) => id -> b.asLong }.toMap))
+        fields(n).map { case (id, b) => id -> b.asLong }.toMap),
+      ts = Option(root.get("ts")).map(_.asLong))
   }
 
   private def putTexts(root: ObjectNode, key: String, xs: Seq[String],

@@ -6,6 +6,7 @@ import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
 import graft.GraftConf
+import graft.functions.{PartDecodeTable, PerFileExpr}
 
 /** A versioned transaction log over plain parquet — the minimal ACID
   * table core of the published lakehouse designs (Armbrust et al.,
@@ -599,14 +600,14 @@ object TxnLog {
 
   /** Attach partition columns to a raw file scan: each partition
     * field's value is derived from the scanned file's PATH (the same
-    * `col=value` segment the log's rel path records) — one codegen'd
-    * O(1) segment-scan + hash-probe expression over
-    * `input_file_name()` ([[graft.functions.PartValueDecodeExpr]],
-    * with a driver-built escaped→decoded table of one entry per
-    * DISTINCT partition value, never per file), then a cast to the
-    * recorded type. Per-row cost is INDEPENDENT of partition
-    * cardinality — the round-14 form probed a literal map linearly,
-    * paying O(partitions) string compares per row on full scans of a
+    * `col=value` segment the log's rel path records) — an O(1)
+    * segment-scan + hash probe ([[graft.functions.PartDecodeTable]],
+    * a driver-built escaped→decoded table of one entry per DISTINCT
+    * partition value, never per file) run once per file by
+    * [[graft.functions.PerFileExpr]], then a cast to the recorded
+    * type. The cost is INDEPENDENT of partition cardinality — the
+    * round-14 form probed a literal map linearly, paying
+    * O(partitions) string compares per row on full scans of a
     * high-cardinality table. This deliberately avoids Spark's
     * directory-discovery reader: discovery rejects k=v segments nested
     * under the log's non-k=v staging dirs
@@ -616,7 +617,7 @@ object TxnLog {
     * DV/metadata objects never take this path. */
   private def attachPartitionCols(df: DataFrame, schema: StructType,
       rels: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.functions.{input_file_name, lit}
+    import org.apache.spark.sql.functions.lit
     val parts = partitionFields(schema)
     if (parts.isEmpty) return df
     parts.foldLeft(df) { (d, f) =>
@@ -640,10 +641,8 @@ object TxnLog {
         }.distinct.toArray
       val v =
         if (pairs.isEmpty) lit(null).cast(f.dataType)
-        else Bridge.column(graft.functions.PartValueDecodeExpr(
-          Bridge.expression(input_file_name()),
-          new graft.functions.PartDecodeTable(
-            s"/$phys=", NullPartName, pairs))).cast(f.dataType)
+        else PerFileExpr.column(
+          new PartDecodeTable(s"/$phys=", NullPartName, pairs).lookup).cast(f.dataType)
       d.withColumn(phys, v)
     }
   }
@@ -715,7 +714,7 @@ object TxnLog {
     * or non-ASCII char, and DML would bind zero files (round-10
     * advice, medium). Relative paths the engine generates
     * (`stage-<uuid>/part-*.parquet`) are encoding-invariant. */
-  private def encodedTablePrefix(spark: SparkSession, table: String): String = {
+  private[sources] def encodedTablePrefix(spark: SparkSession, table: String): String = {
     val p = new Path(table)
     fs(spark, p).makeQualified(p).toUri.toString
   }
@@ -733,20 +732,24 @@ object TxnLog {
     * name (both derive from `Path.toUri` over the same path), so the
     * key is the file name itself — guarded by membership in the
     * snapshot's external set (which keeps the loud-failure property
-    * for encoding drift) up to [[MaxExternalGuard]] entries. */
+    * for encoding drift) up to [[MaxExternalGuard]] entries. The
+    * prefix strip runs once per file and decodes the rest back to the
+    * recorded rel path ([[graft.functions.PerFileExpr.relativeTo]]): a
+    * hive-escaped partition segment (`g=with%20space`) is encoded
+    * again in the scan's report. */
   private def relPathCol(spark: SparkSession, table: String,
       files: Seq[String]): Column = {
-    import org.apache.spark.sql.functions.{concat, input_file_name, lit, raise_error, when}
+    import org.apache.spark.sql.functions.{coalesce, concat, input_file_name, lit, raise_error, when}
     val pfx = encodedTablePrefix(spark, table) + "/"
     val f = input_file_name()
-    val local = when(f.startsWith(pfx), f.substr(lit(pfx.length + 1), lit(1 << 20)))
+    val local = PerFileExpr.column(PerFileExpr.relativeTo(pfx))
     val ext = files.filter(isExternal)
     val err = raise_error(concat(
       lit(s"scan file outside table $table (prefix $pfx): "), f))
-    if (ext.isEmpty) local.otherwise(err)
+    if (ext.isEmpty) coalesce(local, err)
     else if (ext.size <= MaxExternalGuard)
-      local.when(f.isin(ext: _*), f).otherwise(err)
-    else local.otherwise(f)
+      coalesce(local, when(f.isin(ext: _*), f).otherwise(err))
+    else coalesce(local, f)
   }
 
   /** [[readState]] keeping the mask keys (`_gf_rel` relative path,
@@ -1111,7 +1114,8 @@ object TxnLog {
         case None => return None
         case Some((a, r)) =>
           if (writeEntry(f, versionFile(table, next), TxnCodec.Entry(a, r, txn,
-              stats, dvs, cls, copied, schema), exclusive = true)) {
+              stats, dvs, cls, copied, schema,
+              ts = Some(System.currentTimeMillis())), exclusive = true)) {
             // A fresh v0 at this path means any cached snapshot belongs
             // to a previous incarnation (drop + recreate): invalidate
             // so a same-mtime-granule recreate can never serve stale
@@ -4097,20 +4101,18 @@ object TxnLog {
     * table; EXCEPT ALL over that churn then nets out rows a compaction
     * merely moved between files. Bag semantics throughout: k extra
     * copies of a row diff as k inserts. */
-  /** The newest commit version whose version file landed at-or-before
-    * `cutoffMicros` (epoch micros) — commit mtime IS the commit time,
-    * the same contract the catalog's `TIMESTAMP AS OF` uses; this is
-    * the shared resolver behind it, `RESTORE … TIMESTAMP AS OF`, and
-    * the timestamp-addressed `table_changes` TVF, so every
-    * timestamp-addressed verb answers with the same snapshot. */
+  /** The newest commit version committed at-or-before `cutoffMicros`
+    * (epoch micros), by the commit time [[history]] reports (the
+    * entry's `ts`, else the version file's mtime) — the shared
+    * resolver behind the catalog's `TIMESTAMP AS OF`,
+    * `RESTORE … TIMESTAMP AS OF`, and the timestamp-addressed
+    * `table_changes` TVF, so every timestamp-addressed verb answers
+    * with the same snapshot. */
   def versionAtTimestamp(spark: SparkSession, table: String,
                          cutoffMicros: Long): Long = {
-    val f = fs(spark, logDir(table))
     val cutoffMs = cutoffMicros / 1000L
-    val versions = f.listStatus(logDir(table)).toSeq
-      .filter(st => st.getPath.getName.startsWith("v"))
-      .filter(_.getModificationTime <= cutoffMs)
-      .map(_.getPath.getName.stripPrefix("v").stripSuffix(".json").toLong)
+    val versions = versionRows(spark, table)
+      .filter(_._2 <= cutoffMs).map(_._1)
     // A too-early timestamp is NOT "table not found" — the table
     // exists; the request predates its first commit. Say so.
     if (versions.isEmpty) throw new IllegalArgumentException(
@@ -4508,17 +4510,20 @@ object TxnLog {
 
   private[graft] def clearHistoryCache(): Unit = HistoryCache.clear()
 
-  def history(spark: SparkSession, table: String): DataFrame = {
-    import spark.implicits._
+  /** One row per surviving version file: (version, commit millis,
+    * operation, adds, removes, DV bindings, stream txn). The commit
+    * time is the entry's recorded `ts`; entries written before `ts`
+    * existed fall back to the file's mtime, which a copied, restored
+    * or moved log resets to the copy time. */
+  private def versionRows(spark: SparkSession, table: String)
+      : Seq[(Long, Long, String, Long, Long, Long, String)] = {
     val f = fs(spark, logDir(table))
     val dir = logDir(table)
-    // ONE listing serves version discovery AND the mtime column (the
-    // previous form listed the dir, then re-probed getFileStatus per
-    // version file — a second serial O(versions) metadata loop).
+    // ONE listing serves version discovery AND the mtime fallback.
     val statuses =
       if (!f.exists(dir)) Seq.empty[org.apache.hadoop.fs.FileStatus]
       else f.listStatus(dir).toSeq.filterNot(_.isDirectory)
-    val rows = statuses
+    statuses
       .filter(st => st.getPath.getName.startsWith("v") &&
         st.getPath.getName.endsWith(".json"))
       .map { st =>
@@ -4536,12 +4541,18 @@ object TxnLog {
             else if (e.removes.nonEmpty) "REMOVE"
             else if (e.adds.isEmpty && e.schema.isDefined) "EVOLVE SCHEMA"
             else "APPEND"
-          val row = (v, st.getModificationTime, op, e.adds.size.toLong,
-            e.removes.size.toLong, e.dvs.size.toLong, e.txn.orNull)
+          val row = (v, e.ts.getOrElse(st.getModificationTime), op,
+            e.adds.size.toLong, e.removes.size.toLong, e.dvs.size.toLong,
+            e.txn.orNull)
           HistoryCache.put(key, row)
           row
         }
       }
+  }
+
+  def history(spark: SparkSession, table: String): DataFrame = {
+    import spark.implicits._
+    val rows = versionRows(spark, table)
       .sortBy(-_._1)
       .map { case (v, ms, op, a, r, d, txn) =>
         (v, new java.sql.Timestamp(ms), op, a, r, d, txn) }

@@ -667,6 +667,33 @@ class GraftSqlDmlSpec extends AnyFunSuite with SparkSpec {
     assert(e.getMessage.contains("earliest available commit"))
   }
 
+  test("TIMESTAMP AS OF on a copied table picks the version committed at " +
+       "that time, not the copy time") {
+    import dml.implicits._
+    val src = freshTable("t_tscopy_src", Seq((1L, "a")))            // v0
+    Thread.sleep(30)
+    dml.sql("INSERT INTO lake.ns.t_tscopy_src VALUES (2, 'b')")       // v1
+    Thread.sleep(30)
+    dml.sql("INSERT INTO lake.ns.t_tscopy_src VALUES (3, 'c')")       // v2
+    val hist = TxnLog.history(dml, src).select("version", "commit_ts")
+      .as[(Long, java.sql.Timestamp)].collect().toMap
+    Thread.sleep(30)
+    // A plain copy: every copied file gets a fresh mtime.
+    val dst = s"$root/ns/t_tscopy_dst"
+    val srcP = new org.apache.hadoop.fs.Path(src)
+    val fs = srcP.getFileSystem(dml.sparkContext.hadoopConfiguration)
+    org.apache.hadoop.fs.FileUtil.copy(fs, srcP, fs,
+      new org.apache.hadoop.fs.Path(dst), false, dml.sparkContext.hadoopConfiguration)
+    TxnLog.clearHistoryCache()
+    assert(TxnLog.history(dml, dst).select("version", "commit_ts")
+      .as[(Long, java.sql.Timestamp)].collect().toMap === hist)
+    val ts = java.time.LocalDateTime.ofInstant(hist(1L).toInstant,
+      java.time.ZoneOffset.UTC).format(
+      java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss.SSS"))
+    assert(dml.sql(s"SELECT id FROM lake.ns.t_tscopy_dst TIMESTAMP AS OF '$ts'")
+      .as[Long].collect().toSet === Set(1L, 2L))
+  }
+
   test("SQL RANGE predicates file-prune through the log stats: " +
        "value-banded commits scan only the intersecting band") {
     import dml.implicits._

@@ -53,6 +53,8 @@ object SparkSpec {
       // stats-in-log skipping entirely.
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+      .config("spark.hadoop.fs.file.impl",
+        classOf[graft.sources.ForkFreeLocalFileSystem].getName)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -60,7 +60,8 @@ class TxnCodecSpec extends AnyFunSuite {
     copied <- Gen.listOf(hostile)
     schema <- Gen.option(schemaCommit)
     streams <- Gen.option(smallMap(Gen.choose(0L, Long.MaxValue)))
-  } yield Entry(adds, removes, txn, stats, dvs, cls, copied, schema, streams)
+    ts <- Gen.option(Gen.choose(0L, Long.MaxValue))
+  } yield Entry(adds, removes, txn, stats, dvs, cls, copied, schema, streams, ts)
 
   test("property: decode(encode(e)) == e over adversarial strings") {
     val prop = Prop.forAll(entry)(e => TxnCodec.decode(TxnCodec.encode(e)) == e)
