@@ -207,10 +207,9 @@ object TxnSqlDml {
         txnDir(spark, parts).map { dir =>
           // Subqueries in the condition are SUPPORTED (`DELETE …
           // WHERE k IN (SELECT …)` — the GDPR/decontamination shape):
-          // the log's delete resolves them through the session
-          // catalog and derives survivors from the POSITIVE match
-          // set (see TxnLog.delete), so no negated-subquery rewrite
-          // limitation applies.
+          // the merge-on-read delete only ever evaluates the POSITIVE
+          // match (see TxnLog.deleteMoR), so no negated-subquery
+          // rewrite limitation applies.
           GraftDeleteCommand(dir, asColumn(cond, parts, alias)): LogicalPlan
         }
       }.getOrElse(plan)
@@ -307,8 +306,8 @@ object TxnSqlDml {
 
   /** Analyzer rule applying DELETION-VECTOR masks to SQL scans: a
     * [[TxnTable]] relation whose snapshot carries live DVs is replaced
-    * by the log's masked logical plan (scan + broadcast anti-join on
-    * (file, row_index)) BEFORE scan planning — so `SELECT` after a
+    * by the log's masked logical plan (scan + per-file row-index
+    * filter) BEFORE scan planning — so `SELECT` after a
     * MoR `UPDATE`/`DELETE` sees exactly the API-read rows, closing the
     * round-10 "SQL scans refuse DV'd tables" limitation. The output
     * attributes keep the relation's exprIds, so nothing upstream
@@ -332,7 +331,7 @@ object TxnSqlDml {
       plan.resolveOperatorsUp {
         // Rewrites when the snapshot carries live DVs OR column mapping
         // (renamed/dropped columns): both need readState — the former
-        // for the mask anti-join, the latter for the physical→logical
+        // for the mask filter, the latter for the physical→logical
         // name translation a bare parquet scan cannot do (it would
         // silently return all-null for every renamed column).
         case r: DataSourceV2Relation if r.table.isInstanceOf[TxnTable] &&
@@ -990,12 +989,15 @@ case class GraftReplaceWhereCommand(dir: String, predicate: String,
   }
 }
 
-/** `DELETE FROM <txn table> WHERE cond` → [[TxnLog.delete]] (pruned
-  * copy-on-write; only files containing matches rewrite). */
+/** `DELETE FROM <txn table> WHERE cond` → [[TxnLog.deleteMoR]]
+  * (merge-on-read: one commit binds the matched rows to a deletion
+  * vector; no data file rewrites), the same layout as the API's
+  * `deleteMoR`. [[TxnLog.delete]] stays the explicit copy-on-write
+  * verb, and compaction folds the masks away. */
 case class GraftDeleteCommand(dir: String, cond: Column)
     extends LeafRunnableCommand {
   override def run(spark: SparkSession): Seq[Row] = {
-    TxnLog.delete(spark, dir, cond)
+    TxnLog.deleteMoR(spark, dir, cond)
     Seq.empty
   }
 }

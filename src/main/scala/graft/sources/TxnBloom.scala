@@ -107,7 +107,11 @@ object TxnBloom {
   private def dec(name: String): String =
     name.stripSuffix(".bloom").replace("%2F", "/").replace("%25", "%")
 
-  private final case class BloomIn(m: Long, pos: Seq[Long])
+  /** The bloom aggregate's input row. Not `private`: the encoder's
+    * generated projection names the class, and Janino refuses a
+    * private one (the build then falls back to an interpreted
+    * projection after a failed compile). */
+  private[sources] final case class BloomIn(m: Long, pos: Seq[Long])
 
   /** OR-merge bitset aggregator: each input row carries its file's bit
     * width (constant within a group) and its k probe positions; the

@@ -3,10 +3,11 @@ package graft.sources
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{DataType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
+import org.roaringbitmap.longlong.Roaring64NavigableMap
 
 import graft.GraftConf
-import graft.functions.{PartDecodeTable, PerFileExpr}
+import graft.functions.{PartDecodeTable, PerFileExpr, RowMaskExpr, RowMasks}
 
 /** A versioned transaction log over plain parquet — the minimal ACID
   * table core of the published lakehouse designs (Armbrust et al.,
@@ -261,7 +262,11 @@ object TxnLog {
     * "cached state at v−1 + parse one commit" instead of a full
     * checkpoint-plus-tail re-parse (O(table) JSON per statement at
     * 100k files). Capacity is file-state-bounded, not entry-bounded,
-    * so wide tables cannot pin driver memory. */
+    * so wide tables cannot pin driver memory. The same budget holds
+    * the per-file row-index masks of deletion-vector objects
+    * ([[dvMasks]]), keyed `table|dv:<dir>`: a DV object is write-once,
+    * so a loaded mask can only go stale when the object is deleted
+    * ([[vacuum]]) or the table is recreated ([[invalidate]]). */
   private object ResolveCache {
     private val maxEntries = 64
     // Capacity is approximate BYTES, not a file count: a FileState can
@@ -270,21 +275,29 @@ object TxnLog {
     // "bounded" cache (round-17 advice).
     private val maxApproxBytes = 64L * 1024 * 1024
     private var bytes = 0L
-    private val map = new java.util.LinkedHashMap[String, Replayed](16, 0.75f, true)
-    private def weigh(v: Replayed): Long =
-      v.files.iterator.map { case (p, st) =>
-        64L + 2L * p.length +
-          st.stats.fold(0L)(fs => fs.cols.iterator.map { case (c, cs) =>
-            80L + 2L * c.length +
-              (if (cs.minStr != null) 2L * cs.minStr.length else 0L) +
-              (if (cs.maxStr != null) 2L * cs.maxStr.length else 0L)
-          }.sum) +
-          st.dv.fold(0L)(d => 2L * d.length) +
-          st.cl.fold(0L)(c => 2L * c.length)
-      }.sum + v.schema.fold(0L)(sc => 256L * math.max(1, sc.schema.fields.length)) +
-        v.copied.iterator.map(c => 64L + 2L * c._1.length).sum
-    def get(k: String): Option[Replayed] = synchronized(Option(map.get(k)))
-    def put(k: String, v: Replayed): Unit =
+    private val map = new java.util.LinkedHashMap[String, Cached](16, 0.75f, true)
+    private def weigh(v: Cached): Long = v match {
+      case v: Replayed =>
+        v.files.iterator.map { case (p, st) =>
+          64L + 2L * p.length +
+            st.stats.fold(0L)(fs => fs.cols.iterator.map { case (c, cs) =>
+              80L + 2L * c.length +
+                (if (cs.minStr != null) 2L * cs.minStr.length else 0L) +
+                (if (cs.maxStr != null) 2L * cs.maxStr.length else 0L)
+            }.sum) +
+            st.dv.fold(0L)(d => 2L * d.length) +
+            st.cl.fold(0L)(c => 2L * c.length)
+        }.sum + v.schema.fold(0L)(sc => 256L * math.max(1, sc.schema.fields.length)) +
+          v.copied.iterator.map(c => 64L + 2L * c._1.length).sum
+      case m: DvObject =>
+        m.files.iterator.map { case (p, b) =>
+          64L + 2L * p.length + b.serializedSizeInBytes }.sum
+    }
+    def snapshot(k: String): Option[Replayed] =
+      synchronized(Option(map.get(k))).collect { case r: Replayed => r }
+    def mask(k: String): Option[DvObject] =
+      synchronized(Option(map.get(k))).collect { case m: DvObject => m }
+    def put(k: String, v: Cached): Unit =
       synchronized {
         if (!map.containsKey(k)) {
           map.put(k, v)
@@ -295,20 +308,27 @@ object TxnLog {
           }
         }
       }
-    /** Drop every cached snapshot of `table` — called when version 0
-      * publishes at a path: a drop-and-recreate within one mtime
-      * granule (object stores report second-granularity Last-Modified)
-      * with same-length log files would otherwise collide with the old
-      * incarnation's keys and serve a stale snapshot (round-17 advice).
-      * Covers every in-process recreate; cross-process recreates remain
-      * guarded by the (mtime, length) identity, as before. */
-    def invalidate(table: String): Unit = synchronized {
-      val pfx = table + "|"
+    private def evict(keep: String => Boolean): Unit = synchronized {
       val it = map.entrySet().iterator()
       while (it.hasNext) {
         val e = it.next()
-        if (e.getKey.startsWith(pfx)) { bytes -= weigh(e.getValue); it.remove() }
+        if (!keep(e.getKey)) { bytes -= weigh(e.getValue); it.remove() }
       }
+    }
+    /** Drop every cached snapshot and mask of `table` — called when
+      * version 0 publishes at a path: a drop-and-recreate within one
+      * mtime granule (object stores report second-granularity
+      * Last-Modified) with same-length log files would otherwise
+      * collide with the old incarnation's keys and serve a stale
+      * snapshot (round-17 advice). Covers every in-process recreate;
+      * cross-process recreates remain guarded by the (mtime, length)
+      * identity, as before. */
+    def invalidate(table: String): Unit = evict(!_.startsWith(table + "|"))
+    /** Drop the cached masks of `table` whose DV object is not in
+      * `live`. */
+    def evictMasks(table: String, live: Set[String]): Unit = {
+      val pfx = maskKey(table, "")
+      evict(k => !k.startsWith(pfx) || live(k.substring(pfx.length)))
     }
     def clear(): Unit = synchronized { map.clear(); bytes = 0L }
     /** Test hook: current approximate byte accounting. */
@@ -316,12 +336,27 @@ object TxnLog {
     def entryCount: Int = synchronized(map.size)
   }
 
+  private def maskKey(table: String, dvDir: String): String = s"$table|dv:$dvDir"
+
+  /** A value [[ResolveCache]] holds: a replayed snapshot or a loaded
+    * DV object. */
+  private sealed trait Cached
+
+  /** One deletion-vector object's masks: file key → row indexes. */
+  private final case class DvObject(
+      files: Map[String, Roaring64NavigableMap]) extends Cached
+
   /** Test hooks: cache accounting for the eviction spec. */
   private[graft] def resolveCacheApproxBytes: Long = ResolveCache.approxBytes
   private[graft] def resolveCacheEntryCount: Int = ResolveCache.entryCount
 
-  /** Test hook: drop the snapshot cache (cold-path measurements). */
+  /** Test hook: drop the snapshot and mask cache (cold-path
+    * measurements). */
   private[graft] def clearResolveCache(): Unit = ResolveCache.clear()
+
+  /** Test hook: whether the mask of DV object `dvDir` is cached. */
+  private[graft] def maskCached(table: String, dvDir: String): Boolean =
+    ResolveCache.mask(maskKey(table, dvDir)).isDefined
 
   /** One checkpoint-plus-tail replay: the live files, the latest schema
     * recording, the COPY INTO ledger (each source URI with the version
@@ -333,7 +368,7 @@ object TxnLog {
                                     schema: Option[SchemaCommit],
                                     copied: Seq[(String, Long)],
                                     streams: Map[String, Long],
-                                    unmarked: Option[Long])
+                                    unmarked: Option[Long]) extends Cached
 
   private def resolve(spark: SparkSession, table: String,
       version: Option[Long]): (Seq[(String, FileState)], Option[SchemaCommit]) = {
@@ -396,7 +431,7 @@ object TxnLog {
         tail.filter(_ <= upTo).map(tv => fileId(f"v$tv%08d.json")))
         .mkString("|")
     val key = keyAt(v)
-    ResolveCache.get(key) match {
+    ResolveCache.snapshot(key) match {
       case Some(hit) => return hit
       case None =>
     }
@@ -409,7 +444,7 @@ object TxnLog {
     // files make "cached state at w" + "apply (w, v]" ≡ full replay.
     var seeded = -1L
     tail.filter(_ < v).reverse.take(16).find { w =>
-      ResolveCache.get(keyAt(w)) match {
+      ResolveCache.snapshot(keyAt(w)) match {
         case Some(r) =>
           r.files.foreach(live += _); schema = r.schema; copied ++= r.copied
           streams = r.streams; unmarked = r.unmarked; seeded = w; true
@@ -662,15 +697,11 @@ object TxnLog {
     readState(spark, table, files, schema)
   }
 
-  /** Scan a resolved file set applying its deletion vectors: files
-    * with a DV binding get their deleted (file, row_index) pairs
-    * anti-joined out — `_metadata.row_index` is parquet-stable for
-    * immutable files, so the mask is exact across any partitioning.
-    * The DV side is tiny relative to data (∝ deleted rows), so the
-    * planner broadcasts it from parquet size stats; files without a
-    * binding pass through the same anti-join untouched (no DV row can
-    * match them — each DV object carries rows only for files bound to
-    * it or files already removed). */
+  /** Scan a resolved file set applying its deletion vectors: a file
+    * with a DV binding drops the rows its mask marks, by a per-file
+    * row-index filter on the scan ([[readTagged]]). `_metadata.row_index`
+    * is parquet-stable for immutable files, so the mask is exact
+    * across any partitioning. */
   private[graft] def readState(spark: SparkSession, table: String,
       files: Seq[(String, FileState)],
       schema: Option[StructType] = None): DataFrame = {
@@ -754,9 +785,13 @@ object TxnLog {
 
   /** [[readState]] keeping the mask keys (`_gf_rel` relative path,
     * `_gf_idx` row index) as columns when DVs are in play — the mask
-    * keys must be computed ON the scan (metadata columns don't resolve
-    * past the anti-join), so writers that need them (deleteMoR) share
-    * this path instead of re-deriving them downstream. */
+    * keys must be computed ON the scan (metadata columns do not
+    * survive an intervening projection), so writers that need them
+    * (deleteMoR) share this path instead of re-deriving them
+    * downstream. The mask itself is a [[RowMaskExpr]] filter over
+    * those keys: each DV-bound file's row-index bitmap, loaded once
+    * per DV object ([[dvMasks]]) and shipped by broadcast, so a
+    * masked scan plans no join and runs no job beyond its own. */
   private def readTagged(spark: SparkSession, table: String,
       files: Seq[(String, FileState)],
       schema: Option[StructType] = None,
@@ -774,26 +809,94 @@ object TxnLog {
     // Partitioned tables: the files do not CARRY the partition
     // columns (hive layout) — they derive from the file paths here,
     // before masking/projection, so every downstream consumer (DV
-    // joins, DML rewrites, CDC diffs) sees them as ordinary columns.
+    // masks, DML rewrites, CDC diffs) sees them as ordinary columns.
     val base = schema.fold(raw)(s =>
       attachPartitionCols(raw, s, files.map(_._1)))
-    val dvDirs = files.flatMap(_._2.dv).distinct
-    val hasDv = dvDirs.nonEmpty
+    val hasDv = files.exists(_._2.dv.isDefined)
     if (!hasDv && !tagAlways)
       (schema.fold(base)(toLogical(base, _)), false)
     else {
       val tagged = base.withColumn("_gf_rel",
         relPathCol(spark, table, files.map(_._1)))
         .withColumn("_gf_idx", col("_metadata.row_index"))
+      val masks = fileMasks(spark, table, files)
       val masked =
-        if (!hasDv) tagged
-        else tagged.join(
-          spark.read.parquet(dvDirs.map(p => dataPath(table, p)): _*)
-            .select(col("file").as("_gf_rel"), col("idx").as("_gf_idx")),
-          Seq("_gf_rel", "_gf_idx"), "left_anti")
+        if (masks.isEmpty) tagged
+        else tagged.filter(RowMaskExpr.column(col("_gf_rel"), col("_gf_idx"),
+          new RowMasks(spark.sparkContext.broadcast(masks))))
       (schema.fold(masked)(
         toLogical(masked, _, extra = Seq("_gf_rel", "_gf_idx"))), hasDv)
     }
+  }
+
+  /** The fixed schema of a deletion-vector object: one row per masked
+    * row, its file key and row index. */
+  private val DvSchema = StructType(Seq(
+    StructField("file", StringType), StructField("idx", LongType)))
+
+  /** The masks of DV objects `dirs`, each as file key → row indexes.
+    * DV objects are write-once, so each is read at most once per
+    * driver and held in [[ResolveCache]]; the ones not cached load
+    * together in one job, read with [[DvSchema]] (no inference job).
+    * A DV object that is gone (vacuumed) fails the read here. */
+  private def dvMasks(spark: SparkSession, table: String,
+      dirs: Seq[String]): Map[String, Map[String, Roaring64NavigableMap]] = {
+    import org.apache.spark.sql.functions.{col, lit}
+    val want = dirs.distinct
+    val cached = want.flatMap(d =>
+      ResolveCache.mask(maskKey(table, d)).map(d -> _.files)).toMap
+    val cold = want.filterNot(cached.contains)
+    if (cold.isEmpty) return cached
+    val built = cold.map(_ =>
+      scala.collection.mutable.HashMap.empty[String, Roaring64NavigableMap])
+    cold.zipWithIndex.map { case (d, i) =>
+      spark.read.schema(DvSchema).parquet(dataPath(table, d))
+        .select(lit(i), col("file"), col("idx"))
+    }.reduce(_ union _).collect().foreach { r =>
+      built(r.getInt(0)).getOrElseUpdate(r.getString(1),
+        new Roaring64NavigableMap()).addLong(r.getLong(2))
+    }
+    cached ++ cold.zip(built).map { case (d, m) =>
+      m.values.foreach(_.runOptimize())
+      val files = m.toMap
+      ResolveCache.put(maskKey(table, d), DvObject(files))
+      d -> files
+    }
+  }
+
+  /** Each DV-bound file of `files` with its row-index mask. */
+  private def fileMasks(spark: SparkSession, table: String,
+      files: Seq[(String, FileState)]): Map[String, Roaring64NavigableMap] = {
+    val bound = files.collect { case (p, FileState(_, Some(d), _)) => p -> d }
+    if (bound.isEmpty) Map.empty
+    else {
+      val objs = dvMasks(spark, table, bound.map(_._2))
+      bound.flatMap { case (p, d) => objs(d).get(p).map(p -> _) }.toMap
+    }
+  }
+
+  /** Write the DV object `table/sub` holding `masks`, from the driver
+    * (the masks are already there: no job), and seed the mask cache
+    * with it. */
+  private def writeDv(spark: SparkSession, table: String, sub: String,
+      masks: Map[String, Roaring64NavigableMap]): Unit = {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.hadoop.metadata.CompressionCodecName
+    import org.apache.parquet.hadoop.util.HadoopOutputFile
+    val schema = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
+      "message dv { required binary file (STRING); required int64 idx; }")
+    val out = HadoopOutputFile.fromPath(
+      new Path(s"$table/$sub", "part-00000.parquet"),
+      spark.sparkContext.hadoopConfiguration)
+    val w = ExampleParquetWriter.builder(out).withType(schema)
+      .withCompressionCodec(CompressionCodecName.SNAPPY).build()
+    val rows = new SimpleGroupFactory(schema)
+    try masks.toSeq.sortBy(_._1).foreach { case (p, bits) =>
+      val it = bits.getLongIterator
+      while (it.hasNext) w.write(rows.newGroup().append("file", p).append("idx", it.next()))
+    } finally w.close()
+    ResolveCache.put(maskKey(table, sub), DvObject(masks))
   }
 
   // ---- schema enforcement --------------------------------------------------
@@ -1154,12 +1257,32 @@ object TxnLog {
   private def mustCommit(r: Option[CommitResult], what: String): CommitResult =
     r.getOrElse(throw new IllegalStateException(s"$what abandoned after conflict"))
 
+  /** The JVM's file-name encoding, fixed from the locale at start. */
+  private lazy val fileNameCharset: java.nio.charset.Charset =
+    scala.util.Try(java.nio.charset.Charset.forName(
+      System.getProperty("sun.jnu.encoding"))).getOrElse(
+      java.nio.charset.Charset.defaultCharset())
+
+  /** Fail fast on a local lake path the file-name encoding `cs` cannot
+    * represent: java.io maps such characters to `?`, and the first
+    * write would otherwise fail deep in a task. */
+  private[graft] def checkPathEncoding(table: String,
+      cs: java.nio.charset.Charset = fileNameCharset): Unit = {
+    val scheme = new Path(table).toUri.getScheme
+    if ((scheme == null || scheme == "file") && !cs.newEncoder().canEncode(table))
+      throw new IllegalArgumentException(
+        s"lake path $table cannot be named in the JVM's file-name encoding " +
+          s"$cs (sun.jnu.encoding, set from the locale at JVM start): " +
+          "start the JVM under a UTF-8 locale, e.g. LC_ALL=C.UTF-8")
+  }
+
   /** Create the table (version 0) from `df`; the commit records the
     * schema, which every later append is enforced against. Per-file
     * [min,max] stats are collected BY DEFAULT on every supported
     * column ([[statsKind]]) — the Delta convention: skipping coverage
     * should not depend on the writer remembering an opt-in. */
   def create(spark: SparkSession, table: String, df: DataFrame): CommitResult = {
+    checkPathEncoding(table)
     val f = fs(spark, logDir(table))
     f.mkdirs(logDir(table))
     val staged = stage(spark, table, df, mapping = None)
@@ -2102,10 +2225,10 @@ object TxnLog {
     * external keys), so skipping and incremental clustering work from
     * the first read. Deletion vectors are the one physical copy: DV
     * objects are TINY (∝ deleted rows) and their mask keys must match
-    * the clone's scan-derived keys, so each referenced DV dir is
-    * rewritten under `dst` with remapped keys. The clone's history
-    * starts at version 0 — time travel on the two tables is
-    * independent by construction.
+    * the clone's scan-derived keys, so the bound files' masks are
+    * rewritten under `dst` as one DV object with remapped keys. The
+    * clone's history starts at version 0 — time travel on the two
+    * tables is independent by construction.
     *
     * VACUUM CONTRACT (documented, matches Delta): the clone PINS
     * NOTHING in the source — a vacuum on `src` that physically
@@ -2125,7 +2248,6 @@ object TxnLog {
     require(!dlf.exists(logDir(dst)),
       s"cannot clone into $dst: it already carries a transaction log")
     val srcFs = fs(spark, new Path(src))
-    val qualifiedSrc = srcFs.makeQualified(new Path(src)).toUri.toString
     // The external key MUST byte-match input_file_name()'s report for
     // the file (SparkPath.urlEncoded = Path.toUri.toString over the
     // LISTED, fs-qualified path) — `makeQualified` is the one
@@ -2140,28 +2262,16 @@ object TxnLog {
       pfs.makeQualified(p).toUri.toString
     }
     val translated = files.map { case (rel, st) => extern(rel) -> st }
-    val dvDirs = files.flatMap(_._2.dv).distinct
-    val dvSubs: Map[String, String] = dvDirs.map { d =>
-      import org.apache.spark.sql.functions.{col, udf}
-      val sub = s"stage-${java.util.UUID.randomUUID().toString.take(12)}"
-      val qs = qualifiedSrc
-      // Executor-side twin of extern() for the mask keys: the same
-      // per-segment URI quoting Path.toUri applies (attachPartition-
-      // Cols' uriEncode), concatenated under the qualified source
-      // root — no FileSystem handle needed on the executor.
-      val remap = udf((rel: String) =>
-        if (isExternal(rel)) rel
-        else qs + "/" + rel.split('/').map(seg =>
-          new java.net.URI(null, null, "/" + seg, null)
-            .getRawPath.substring(1)).mkString("/"))
-      spark.read.parquet(dataPath(src, d))
-        .select(remap(col("file")).as("file"), col("idx"))
-        .write.parquet(s"$dst/$sub")
-      d -> sub
-    }.toMap
-    val dvs = files.collect { case (rel, st) if st.dv.isDefined =>
-      extern(rel) -> dvSubs(st.dv.get)
-    }.toMap
+    // One DV object under `dst` carries every bound file's mask,
+    // re-keyed to the clone's external keys.
+    val masks = fileMasks(spark, src, files).map { case (rel, b) => extern(rel) -> b }
+    val dvs =
+      if (masks.isEmpty) Map.empty[String, String]
+      else {
+        val sub = s"stage-${java.util.UUID.randomUUID().toString.take(12)}"
+        writeDv(spark, dst, sub, masks)
+        masks.keys.map(_ -> sub).toMap
+      }
     // TABLE-LEVEL sidecars ride along (both tiny): the bloom COLUMN
     // CONFIG (so the clone's own writes keep publishing point-lookup
     // sidecars — external files simply lack segments and always scan,
@@ -2504,6 +2614,7 @@ object TxnLog {
     * generated values are unique across any interleaving. */
   def append(spark: SparkSession, table: String, df: DataFrame,
              mergeSchema: Boolean = false): CommitResult = {
+    checkPathEncoding(table)
     var attempt = 0
     while (true) {
       // ONE tip replay per attempt serves the schema read, the
@@ -3124,7 +3235,7 @@ object TxnLog {
       read(spark, table, version).filter(org.apache.spark.sql.functions.lit(false))
     } else {
       // Stats bound the PRE-mask population, so they stay valid (an
-      // over-approximation) under DVs; the DV anti-join still applies.
+      // over-approximation) under DVs; the DV mask still applies.
       val df = readState(spark, table, kept, schema)
       df.filter(residual(df))
     }
@@ -3156,9 +3267,13 @@ object TxnLog {
     val cpCut = ckpts.filter(_ <= keepFrom).lastOption.getOrElse(return Nil)
     val deadV = versions.filter(_ < cpCut).map(v => f"v$v%08d.json")
     val deadC = ckpts.filter(_ < cpCut).map(c => f"c$c%08d.json")
-    (deadV ++ deadC).filter(n =>
+    val deleted = (deadV ++ deadC).filter(n =>
       scala.util.Try(f.delete(new Path(logDir(table), n), false))
         .getOrElse(false))
+    // Masks only the cleaned versions bound are unreachable now.
+    if (deleted.nonEmpty)
+      ResolveCache.evictMasks(table, snapshotFull(spark, table).flatMap(_._2.dv).toSet)
+    deleted
   }
 
   /** RESTORE the table to the state of `toVersion`, as ONE NEW commit
@@ -3912,10 +4027,9 @@ object TxnLog {
     val snapSchema = meta.map(_.schema)
     val states = full.toMap
     // Victim detection keys on the scan-computed relative path
-    // (tagAlways): input_file_name() cannot be added AFTER the DV
-    // anti-join or the logical projection — with a mask in play the
-    // plan has two file sources, and metadata columns don't survive
-    // an intervening select.
+    // (tagAlways): input_file_name() cannot be added AFTER the
+    // logical projection — metadata columns don't survive an
+    // intervening select.
     val (keyed, _) = readTagged(spark, table, full, snapSchema,
       tagAlways = true)
     // limit(cap+1) bounds BOTH driver memory and the job: one pass,
@@ -3978,17 +4092,18 @@ object TxnLog {
 
   /** Merge-on-read row-level DELETE via DELETION VECTORS: instead of
     * rewriting victim files (copy-on-write), one commit binds them to
-    * a DV — a staged parquet dataset of (file, row_index) pairs — and
-    * every reader anti-joins the mask out. The write cost is ∝ DELETED
-    * ROWS, not victim-file bytes: a needle delete on a 100 TB table
-    * stages kilobytes where COW would rewrite gigabytes; the read-side
-    * tax is one broadcast anti-join until [[compact]] (or any COW op)
-    * materializes the mask away. DVs are CUMULATIVE: each deleteMoR
-    * folds the previous mask into the new DV object and re-binds every
-    * masked file, so the snapshot always carries ONE dv reference per
-    * file and old DV objects age out through [[vacuum]]. Returns None
-    * when no visible row matched; throws if a concurrent writer
-    * replaced a victim or moved the mask (same contract as [[delete]]).
+    * a DV — a staged parquet object of (file, row_index) pairs — and
+    * every reader filters the marked rows out of its scan. The write
+    * cost is ∝ DELETED ROWS, not victim-file bytes: a needle delete on
+    * a 100 TB table stages kilobytes where COW would rewrite
+    * gigabytes; the read-side tax is one bitmap probe per row until
+    * [[compact]] (or any COW op) materializes the mask away. DVs are
+    * CUMULATIVE: each deleteMoR folds the previous masks into the new
+    * DV object and re-binds every masked file, so the snapshot always
+    * carries ONE dv reference per file and old DV objects age out
+    * through [[vacuum]]. Returns None when no visible row matched;
+    * throws if a concurrent writer replaced a victim or moved the mask
+    * (same contract as [[delete]]). SQL `DELETE FROM` runs here too.
     */
   def deleteMoR(spark: SparkSession, table: String,
                 predicate: Column): Option[CommitResult] =
@@ -4014,7 +4129,16 @@ object TxnLog {
     morDml(spark, table, predicate, replacement = None, pin = Some(base))
 
   /** Shared MoR DML body: mask matched rows; for UPDATE, also stage
-    * their rewritten copies as data adds in the SAME commit. */
+    * their rewritten copies as data adds in the SAME commit.
+    *
+    * One masked scan finds the matches, and the driver collects their
+    * keys (file, row index) as per-file bitmaps, never the rows. The
+    * new DV object folds those keys into the bound files' current
+    * masks (already loaded by the scan) and is written from the
+    * driver. An UPDATE reads the matched files once more, keeping
+    * exactly the collected rows, to stage their copies. So a delete
+    * runs one job and an update two, besides what staging itself adds
+    * (sidecars, wide-write stats). */
   private def morDml(spark: SparkSession, table: String,
                      predicate: Column,
                      replacement: Option[Map[String, Column]],
@@ -4033,13 +4157,43 @@ object TxnLog {
     // the new mask twice — the fold below carries them exactly once).
     val (keyed, _) = readTagged(spark, table, full, snapSchema,
       tagAlways = true)
-    val matched = keyed.filter(predicate)
-    if (matched.isEmpty) return None
-    val victims = matched
-      .select(col("_gf_rel").as("file"), col("_gf_idx").as("idx"))
+    // Each task folds its matched keys into per-file bitmaps, so the
+    // driver receives them compressed.
+    val hits = keyed.filter(predicate).select(col("_gf_rel"), col("_gf_idx"))
+      .queryExecution.toRdd.mapPartitions { rows =>
+        val m = scala.collection.mutable.HashMap.empty[String, Roaring64NavigableMap]
+        var file: org.apache.spark.unsafe.types.UTF8String = null
+        var bits: Roaring64NavigableMap = null
+        rows.foreach { r =>
+          if (file == null || file != r.getUTF8String(0)) {
+            file = r.getUTF8String(0).clone()
+            bits = m.getOrElseUpdate(file.toString, new Roaring64NavigableMap())
+          }
+          bits.addLong(r.getLong(1))
+        }
+        Iterator.single(m.toMap)
+      }.collect().toSeq.flatten.groupMapReduce(_._1)(_._2) { (a, b) => a.or(b); a }
+    if (hits.isEmpty) return None
     val what = if (replacement.isDefined) "updateMoR" else "deleteMoR"
+    // A matched key naming a file outside the snapshot means the
+    // rel-path derivation broke — failing loudly beats publishing a
+    // mask that binds nothing and reporting a successful no-op
+    // (round-10 advice).
+    hits.keys.find(!states.contains(_)).foreach(p =>
+      throw new IllegalStateException(
+        s"$what on $table matched rows in $p, which is not a live file — " +
+          "relative-path derivation is inconsistent with the snapshot"))
     val adds = replacement.fold(Seq.empty[String]) { set =>
-      val updated = set.foldLeft(matched.drop("_gf_rel", "_gf_idx")) {
+      // The matched files only, unmasked: the collected keys select
+      // exactly the matched rows (none of them is in an old mask).
+      val hitFiles = full.collect {
+        case (p, st) if hits.contains(p) => p -> st.copy(dv = None) }
+      val (src, _) = readTagged(spark, table, hitFiles, snapSchema,
+        tagAlways = true)
+      val matched = src.filter(RowMaskExpr.column(col("_gf_rel"), col("_gf_idx"),
+        new RowMasks(spark.sparkContext.broadcast(hits)), selectMarked = true))
+        .drop("_gf_rel", "_gf_idx")
+      val updated = set.foldLeft(matched) {
         case (df, (c, e)) => df.withColumn(c, e)
       }
       // A SET expression can silently retype a column — the staged
@@ -4057,26 +4211,21 @@ object TxnLog {
         if (statCols.isEmpty) Map.empty[String, FileStats]
         else stagedStats(spark, table, adds, statCols, snapSchema)
       }
-    val oldDvDirs = full.flatMap(_._2.dv).distinct
-    val newDv =
-      if (oldDvDirs.isEmpty) victims
-      else victims.unionByName(
-        spark.read.parquet(oldDvDirs.map(p => dataPath(table, p)): _*)
-          .select("file", "idx"))
+    // Bind every LIVE file the new mask touches: the matched files and
+    // the previously masked ones, each with its old mask folded in.
+    val old = fileMasks(spark, table, full)
+    val folded = (old.keySet ++ hits.keySet).toSeq.map { p =>
+      p -> hits.get(p).fold(old(p)) { h =>
+        val b = new Roaring64NavigableMap()
+        b.or(h)
+        old.get(p).foreach(b.or)
+        b.runOptimize()
+        b
+      }
+    }.toMap
     val sub = s"stage-${java.util.UUID.randomUUID().toString.take(12)}"
-    newDv.write.parquet(s"$table/$sub")
-    // Bind every LIVE file the new mask touches (victims + previously
-    // masked); mask rows for since-removed files ride along inert.
-    val boundFiles = spark.read.parquet(s"$table/$sub")
-      .select("file").distinct().collect().map(_.getString(0))
-      .filter(states.contains).toSeq
-    // matched was non-empty, so an empty binding means the rel-path
-    // derivation broke — failing loudly beats publishing an empty
-    // commit and reporting a successful no-op delete (round-10 advice).
-    if (boundFiles.isEmpty)
-      throw new IllegalStateException(
-        s"$what on $table matched rows but bound zero live files — " +
-          "relative-path derivation is inconsistent with the snapshot")
+    writeDv(spark, table, sub, folded)
+    val boundFiles = folded.keys.toSeq
     val binding = boundFiles.map(_ -> sub).toMap
     commitLoop(spark, table, dvs = binding, stats = addStats) { v =>
       val current = snapshotFull(spark, table, Some(v - 1)).toMap
@@ -4120,6 +4269,16 @@ object TxnLog {
         "earliest available commit — nothing to travel to")
     versions.max
   }
+
+  /** Smallest version committed at-or-after `cutoffMs` (epoch millis),
+    * by the same commit time as [[versionAtTimestamp]], or latest+1
+    * when every commit predates it (tail only new commits — the
+    * natural reading of "start from a future-ish timestamp"): the
+    * `graft-txn` stream source's `startingTimestamp`. */
+  private[sources] def firstVersionAtOrAfter(spark: SparkSession, table: String,
+                                             cutoffMs: Long): Long =
+    versionRows(spark, table).filter(_._2 >= cutoffMs).map(_._1).minOption
+      .getOrElse(latestVersion(spark, table) + 1)
 
   /** Parse a SQL timestamp string (`yyyy-MM-dd[ HH:mm:ss[.f…]]`) to
     * epoch micros under the engine's UTC session convention. */
@@ -4616,6 +4775,10 @@ object TxnLog {
         candidates.filterNot(retained)
       }
     if (dryRun) return dead // report the candidates, touch nothing
+    // A mask no retained version binds must not outlive its object: a
+    // time-travel read past retention has to fail on the missing DV,
+    // not be answered from the cache.
+    ResolveCache.evictMasks(table, liveDvDirs)
     // Deletes fan out too (one RPC per dead file; idempotent — a
     // retried task's second delete of the same path is a no-op).
     MetaFanout.adaptiveMap(spark, dead) { (conf, p) =>

@@ -129,7 +129,7 @@ class TxnStreamProvider extends StreamSourceProvider with StreamSinkProvider
         try raw.toLong
         catch { case _: NumberFormatException =>
           java.sql.Timestamp.valueOf(raw).getTime }
-      firstVersionAtOrAfter(spark, table, cutoffMs)
+      TxnLog.firstVersionAtOrAfter(spark, table, cutoffMs)
     })
     new TxnSource(spark, table,
       sourceSchema(ctx, schema, providerName, params)._2,
@@ -137,23 +137,6 @@ class TxnStreamProvider extends StreamSourceProvider with StreamSinkProvider
       maxFilesPerTrigger = params.get("maxfilespertrigger").map(_.toInt),
       startFrom = startFrom,
       changeFeed = cdf(params))
-  }
-
-  /** Smallest version whose commit landed at-or-after `cutoffMs`, or
-    * latest+1 when every commit predates it (tail only new commits —
-    * the natural reading of "start from a future-ish timestamp"). */
-  private def firstVersionAtOrAfter(spark: org.apache.spark.sql.SparkSession,
-      table: String, cutoffMs: Long): Long = {
-    val logP = new org.apache.hadoop.fs.Path(table, "_log")
-    val f = logP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hits = f.listStatus(logP).toSeq
-      .filter { st =>
-        val n = st.getPath.getName
-        n.startsWith("v") && n.endsWith(".json") &&
-          st.getModificationTime >= cutoffMs
-      }
-      .map(_.getPath.getName.stripPrefix("v").stripSuffix(".json").toLong)
-    if (hits.isEmpty) TxnLog.latestVersion(spark, table) + 1 else hits.min
   }
 }
 

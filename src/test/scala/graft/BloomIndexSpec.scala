@@ -368,4 +368,39 @@ class BloomIndexSpec extends AnyFunSuite with SparkSpec {
     // A value outside every band returns empty without scanning.
     assert(TxnLog.readPrunedEq(spark, t, "id", Seq(99999L)).count() === 0L)
   }
+
+  /** Every log event `body` emits at the session's level (WARN), as
+    * message plus throwable text. */
+  private def logsDuring(body: => Unit): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val app = new AbstractAppender("graft-log-capture", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        seen.add(e.getMessage.getFormattedMessage +
+          Option(e.getThrown).fold("")(t => s" $t"))
+    }
+    app.start()
+    val root = LogManager.getRootLogger.asInstanceOf[Logger]
+    root.addAppender(app)
+    try body finally { root.removeAppender(app); app.stop() }
+    seen.asScala.toSeq
+  }
+
+  test("a bloom build compiles its aggregate input's projection: no " +
+       "Janino private-access failure and interpreted fallback") {
+    import spark.implicits._
+    val t = freshTable("janino")
+    val df = (0L until 200L).map(i => (i, s"name-$i")).toDF("id", "name")
+    val logs = logsDuring(TxnLog.createWithBloom(spark, t, df.coalesce(2),
+      Seq("id", "name")))
+    val denied = logs.filter(_.contains("Private member cannot be accessed"))
+    assert(denied.isEmpty, denied.headOption.getOrElse("").take(500))
+    assert(TxnLog.readPrunedEq(spark, t, "id", Seq(7L, 150L))
+      .collect().map(_.getLong(0)).sorted.toSeq === Seq(7L, 150L))
+  }
 }

@@ -52,20 +52,38 @@ class GraftSqlDmlSpec extends AnyFunSuite with SparkSpec {
       .head().getLong(0) === 4, "pre-overwrite snapshot must survive")
   }
 
-  test("DELETE FROM routes to the pruned COW delete (alias and " +
+  /** One SQL DELETE's commit on the merge-on-read layout: the version
+    * it published binds a DV and neither adds nor removes a data file. */
+  private def assertMoRDelete(dir: String, version: Long): Unit = {
+    assert(TxnLog.latestVersion(dml, dir) === version, "one commit per DELETE")
+    val c = TxnLog.commit(dml, dir, version)
+    assert(c.dvs.nonEmpty, "DELETE must bind a deletion vector")
+    assert(c.adds.isEmpty && c.removes.isEmpty, s"no data file may move: $c")
+  }
+
+  test("DELETE FROM routes to the merge-on-read delete (alias and " +
        "qualified columns included)") {
     val dir = freshTable("t_del",
       (0L to 9L).map(i => (i, s"r$i")))
+    val files0 = TxnLog.snapshot(dml, dir).toSet
     dml.sql("DELETE FROM lake.ns.t_del WHERE id % 2 = 0")
     assert(content("t_del").map(_._1) === Set(1L, 3L, 5L, 7L, 9L))
+    assertMoRDelete(dir, 1L)
     // Alias-qualified condition resolves after qualifier stripping.
     dml.sql("DELETE FROM lake.ns.t_del AS x WHERE x.id = 1")
     assert(content("t_del").map(_._1) === Set(3L, 5L, 7L, 9L))
-    // COW: no deletion vectors in the snapshot.
-    assert(TxnLog.snapshotFull(dml, dir).forall(_._2.dv.isEmpty))
+    assertMoRDelete(dir, 2L)
+    // MoR: the original files stay live behind the mask.
+    val snap = TxnLog.snapshotFull(dml, dir)
+    assert(snap.map(_._1).toSet === files0)
+    assert(snap.exists(_._2.dv.isDefined))
     val ops = TxnLog.history(dml, dir).select("operation")
       .collect().map(_.getString(0))
-    assert(ops.count(_.startsWith("REWRITE")) === 2)
+    assert(ops.count(_ == "DELETE (merge-on-read)") === 2)
+    assert(dml.sql("SELECT count(*) AS n FROM lake.ns.t_del VERSION AS OF 0")
+      .head().getLong(0) === 10, "pre-delete snapshot must survive")
+    // The API door gives the same answer on the same layout.
+    assert(TxnLog.read(dml, dir).count() === 4)
   }
 
   test("UPDATE routes to the merge-on-read update and SELECT applies " +
@@ -135,24 +153,29 @@ class GraftSqlDmlSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("DELETE with an IN subquery condition — the decontamination " +
-       "shape — routes to the pruned COW delete") {
+       "shape — routes to the merge-on-read delete") {
     val dir = freshTable("t_subq", (0L to 9L).map(i => (i, s"r$i")))
     freshTable("t_block", Seq((2L, "x"), (5L, "x"), (7L, "x"), (100L, "x")))
+    val files0 = TxnLog.snapshot(dml, dir).toSet
     dml.sql(
       """DELETE FROM lake.ns.t_subq
         |WHERE id IN (SELECT id FROM lake.ns.t_block)""".stripMargin)
     assert(content("t_subq").map(_._1) === Set(0L, 1L, 3L, 4L, 6L, 8L, 9L))
-    // Still COW, one commit, time travel intact.
-    assert(TxnLog.snapshotFull(dml, dir).forall(_._2.dv.isEmpty))
+    // MoR, one commit, no file moved, time travel intact.
+    assertMoRDelete(dir, 1L)
+    assert(TxnLog.snapshot(dml, dir).toSet === files0)
     assert(dml.sql("SELECT count(*) AS n FROM lake.ns.t_subq VERSION AS OF 0")
       .head().getLong(0) === 10)
     // EXISTS composed with plain predicates works through the same
-    // positive-match anti-join machinery.
+    // positive-match path.
     dml.sql(
       """DELETE FROM lake.ns.t_subq
         |WHERE id = 9
         |  AND EXISTS (SELECT 1 FROM lake.ns.t_block b WHERE b.id < 999)""".stripMargin)
     assert(content("t_subq").map(_._1) === Set(0L, 1L, 3L, 4L, 6L, 8L))
+    assertMoRDelete(dir, 2L)
+    assert(dml.sql("SELECT count(*) AS n FROM lake.ns.t_subq VERSION AS OF 1")
+      .head().getLong(0) === 7)
     // UPDATE with a WHERE subquery (positive filter only — supported).
     dml.sql(
       """UPDATE lake.ns.t_subq SET s = 'hit'
@@ -371,14 +394,18 @@ class GraftSqlDmlSpec extends AnyFunSuite with SparkSpec {
       .as[(Long, String)].collect().toSeq
     assert(hist.map(_._1) === Seq(0L, 1L, 2L))
     assert(hist.head._2 === "CREATE")
-    assert(hist(2)._2.startsWith("REWRITE"))
+    assert(hist(2)._2 === "DELETE (merge-on-read)")
     // table_files: one row per live file, log-carried counts, version
     // arg pins a snapshot (v0 had two files' worth of rows = 2).
     val live = dml.sql(s"SELECT path, row_count FROM table_files('$dir')")
       .as[(String, Long)].collect().toSeq
     assert(live.nonEmpty && live.forall(_._2 >= 0L))
+    // Post-delete: the merge-on-read delete leaves the files whole
+    // (rows 1, 2 and 3) and binds row 1's file to the mask.
     assert(dml.sql(s"SELECT sum(row_count) FROM table_files('$dir')")
-      .head().getLong(0) === 2L) // post-delete: rows 2 and 3
+      .head().getLong(0) === 3L)
+    assert(dml.sql(s"SELECT count(dv_binding) FROM table_files('$dir')")
+      .head().getLong(0) === 1L)
     assert(dml.sql(s"SELECT sum(row_count) FROM table_files('$dir', 0)")
       .head().getLong(0) === 2L) // v0: rows 1 and 2
     // Bad arity fails at analysis with the usage string.
@@ -1303,7 +1330,9 @@ class GraftSqlDmlSpec extends AnyFunSuite with SparkSpec {
     import dml.implicits._
     val dir = freshTable("t_rst",
       Seq((1L, "a"), (2L, "b"), (3L, "c"), (4L, "d")))   // v0
-    dml.sql(s"DELETE FROM lake.ns.t_rst WHERE id IN (2, 4)") // v1 (COW)
+    // v1: the explicit copy-on-write delete, so v0's file leaves the
+    // snapshot and a vacuum can reclaim it (SQL DELETE would mask).
+    TxnLog.delete(dml, dir, $"id".isin(2, 4))
     dml.sql("ALTER TABLE lake.ns.t_rst ADD COLUMNS (extra STRING)") // v2
     assert(content("t_rst") === Set((1L, "a"), (3L, "c")))
     val r = dml.sql(s"RESTORE '$dir' TO VERSION AS OF 0")

@@ -109,6 +109,26 @@ class PerFileKeySpec extends AnyFunSuite with SparkSpec {
       (10L until 90L).toSet)
   }
 
+  test("a lake path the JVM's file-name encoding cannot represent fails " +
+       "fast, naming sun.jnu.encoding and LC_ALL") {
+    import java.nio.charset.StandardCharsets.{US_ASCII, UTF_8}
+    val nonAscii = s"${tmp("jnu")}/lake é中/t"
+    val e = intercept[IllegalArgumentException](
+      TxnLog.checkPathEncoding(nonAscii, US_ASCII))
+    assert(e.getMessage.contains("sun.jnu.encoding") && e.getMessage.contains("LC_ALL"),
+      e.getMessage)
+    assert(e.getMessage.contains(nonAscii))
+    TxnLog.checkPathEncoding(nonAscii, UTF_8)
+    TxnLog.checkPathEncoding(s"file:${tmp("jnu")}/lake/t", US_ASCII)
+    // Object-store names are not the JVM's file names.
+    TxnLog.checkPathEncoding("s3a://bucket/lake é/t", US_ASCII)
+    // The JVM's own encoding is UTF-8 here, so create and append pass it.
+    import spark.implicits._
+    TxnLog.create(spark, nonAscii, Seq((1L, "a")).toDF("id", "s"))
+    TxnLog.append(spark, nonAscii, Seq((2L, "b")).toDF("id", "s"))
+    assert(TxnLog.read(spark, nonAscii).count() === 2)
+  }
+
   test("partitioned MoR reads agree in codegen and interpreted mode") {
     import spark.implicits._
     val t = s"${tmp("modes")}/t"

@@ -18,6 +18,14 @@ class TxnStreamSpec extends AnyFunSuite with SparkSpec {
     dir
   }
 
+  /** Each version's commit time (epoch millis), as `history` reports it. */
+  private def commitMillis(table: String): Map[Long, Long] = {
+    import spark.implicits._
+    TxnLog.history(spark, table).select("version", "commit_ts")
+      .as[(Long, java.sql.Timestamp)].collect()
+      .map { case (v, t) => v -> t.getTime }.toMap
+  }
+
   test("initial snapshot, then each append arrives exactly once") {
     import spark.implicits._
     val table = freshTable("tail")
@@ -175,15 +183,15 @@ class TxnStreamSpec extends AnyFunSuite with SparkSpec {
     val table = freshTable("fromts")
     TxnLog.create(spark, table, Seq((1L, "old")).toDF("id", "s"))
     TxnLog.append(spark, table, Seq((2L, "mid")).toDF("id", "s"))
-    // Commit times are file mtimes: take v1's mtime as the cutoff, so
+    // Commit times are the entries' `ts`: take v1's as the cutoff, so
     // the stream must deliver v1's adds onward but NOT the v0 snapshot.
-    val logP = new org.apache.hadoop.fs.Path(table, "_log")
-    val fs = logP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val v1ts = fs.getFileStatus(
-      new org.apache.hadoop.fs.Path(logP, "v00000001.json")).getModificationTime
-    // Ensure v0 strictly predates the cutoff on coarse-mtime filesystems.
-    fs.setTimes(new org.apache.hadoop.fs.Path(logP, "v00000000.json"),
-      v1ts - 10000, -1)
+    val v1ts = commitMillis(table)(1L)
+    // Ensure v0 strictly predates the cutoff on a coarse clock.
+    val v0 = java.nio.file.Paths.get(table, "_log", "v00000000.json")
+    java.nio.file.Files.writeString(v0, java.nio.file.Files.readString(v0)
+      .replaceFirst("\"ts\"\\s*:\\s*\\d+", "\"ts\":" + (v1ts - 10000)))
+    TxnLog.clearHistoryCache()
+    assert(commitMillis(table)(0L) === v1ts - 10000)
     val q = spark.readStream.format("graft-txn")
       .option("startingTimestamp", v1ts.toString).load(table)
       .writeStream.format("memory").queryName("txn_ts").start()
@@ -216,6 +224,34 @@ class TxnStreamSpec extends AnyFunSuite with SparkSpec {
         .load(table)
         .writeStream.format("memory").queryName("txn_ts3").start()
     }
+  }
+
+  test("startingTimestamp on a copied table starts at the version " +
+       "committed at that time, not at the copy time") {
+    import spark.implicits._
+    val src = freshTable("tscopy_src")
+    TxnLog.create(spark, src, Seq((1L, "old")).toDF("id", "s"))
+    Thread.sleep(30)
+    TxnLog.append(spark, src, Seq((2L, "mid")).toDF("id", "s"))
+    Thread.sleep(30)
+    TxnLog.append(spark, src, Seq((3L, "new")).toDF("id", "s"))
+    val v1ts = commitMillis(src)(1L)
+    Thread.sleep(30)
+    // A plain copy: every copied file gets a fresh mtime.
+    val dst = freshTable("tscopy_dst")
+    val conf = spark.sparkContext.hadoopConfiguration
+    val srcP = new org.apache.hadoop.fs.Path(src)
+    val fs = srcP.getFileSystem(conf)
+    org.apache.hadoop.fs.FileUtil.copy(fs, srcP, fs,
+      new org.apache.hadoop.fs.Path(dst), false, conf)
+    val q = spark.readStream.format("graft-txn")
+      .option("startingTimestamp", v1ts.toString).load(dst)
+      .writeStream.format("memory").queryName("txn_tscopy").start()
+    try {
+      q.processAllAvailable()
+      assert(spark.table("txn_tscopy").as[(Long, String)].collect().sorted.toSeq
+        === Seq((2L, "mid"), (3L, "new")), "must start at v1, not at v0")
+    } finally q.stop()
   }
 
   test("the graft-txn SINK lands micro-batches exactly once through " +
