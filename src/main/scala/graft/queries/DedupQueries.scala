@@ -1,8 +1,9 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
 import graft.functions.TextFunctions
 import graft.sources.Tables
@@ -83,8 +84,11 @@ object DedupQueries extends QueryModule {
     val sigs = base.select(col("doc_id"),
       graft.functions.MinHashExpr(col("hs"), minhashSeeds).as("sig"))
     // Staged too: both candidate-join sides read the band table, and
-    // recomputing it would re-run the signature pass per side.
-    val bands = StagedCache.persist(sigs.select(col("doc_id"),
+    // recomputing it would re-run the signature pass per side. Built
+    // now, which also builds a lazily staged `base` under it: the
+    // candidate join and the verify join then find both materialized,
+    // where a lazy stage is built once per scan in the plan.
+    val bands = StagedCache.persistBuilt(sigs.select(col("doc_id"),
       explode(array((0 until minhashSeeds / 2).map(j =>
         concat_ws(":", lit(j.toString),
           element_at(col("sig"), 2 * j + 1).cast("string"),
@@ -98,6 +102,110 @@ object DedupQueries extends QueryModule {
 
   private def minhashPairs(base: DataFrame): DataFrame =
     verifyPairs(minhashCandidates(base), base, 0.5)
+
+  /** Edge-row cap of the driver-side triangle census. (long, long)
+    * edges are 16 bytes, so the cap holds the collected edge list to
+    * about 16 MB, and the census's hash maps to a few times that. The
+    * census is O(m^1.5) work: at the cap it measured 1.3–1.8 s warm
+    * (random and hub-heavy graphs, 4-vCPU VM), where the distributed
+    * census pays about 14 sequential stage jobs at any size. A
+    * constant, like [[graft.operators.ConnectedComponents]]'s
+    * partition sizing. */
+  private[graft] val TriangleLocalRows = 1 << 20
+
+  /** Forces q_triangle_count's distributed census at any edge count:
+    * the parity legs compare it with the local one. Static like
+    * [[graft.sources.MetaFanout.testDistribute]], never a conf. */
+  @volatile private[graft] var testDistributedCensus = false
+
+  /** The census's output schema, shared by both censuses. */
+  private[graft] val triangleSchema = StructType(Seq(
+    StructField("n_nodes", LongType, nullable = false),
+    StructField("n_edges", LongType, nullable = false),
+    StructField("n_wedges", LongType, nullable = true),
+    StructField("n_triangles", LongType, nullable = false),
+    StructField("gcc", DoubleType, nullable = true)))
+
+  /** Triangle census of a distinct, canonical (doc_a < doc_b) edge list.
+    * Edges are ORIENTED from the (degree, id)-smaller endpoint, so each
+    * triangle is generated exactly once and wedge fan-out is bounded by
+    * out-degrees of the min-degree orientation — the classic O(m^1.5)
+    * triangle-enumeration bound instead of max-degree² hub explosion.
+    * Wedge closure is a pure EQUI-join on the canonicalized (least,
+    * greatest) pair key; no OR-condition join (which would plan a
+    * BroadcastNestedLoop) exists. `deg` and `oriented` are not staged:
+    * their second reads are identical subtrees, which exchange reuse
+    * answers from the first read's shuffle. */
+  private[graft] def distributedTriangleCensus(pairs: DataFrame): DataFrame = {
+    val deg = pairs
+      .select(explode(array(col("doc_a"), col("doc_b"))).as("v"))
+      .groupBy("v").agg(count(lit(1)).as("deg"))
+    val oriented = pairs
+      .join(deg.select(col("v").as("doc_a"), col("deg").as("da")), "doc_a")
+      .join(deg.select(col("v").as("doc_b"), col("deg").as("db")), "doc_b")
+      // Ties fall to doc_a: pairs are canonical doc_a < doc_b, so
+      // (deg, id) is a total order and each triangle has exactly ONE
+      // all-outgoing vertex.
+      .select(when(col("da") <= col("db"), col("doc_a")).otherwise(col("doc_b")).as("src"),
+        when(col("da") <= col("db"), col("doc_b")).otherwise(col("doc_a")).as("dst"))
+    // x.dst < y.dst in the join already canonicalizes the closing
+    // pair key (pairs are doc_a < doc_b) — no least/greatest needed.
+    val wedges = oriented.as("x")
+      .join(oriented.as("y"), col("x.src") === col("y.src")
+        && col("x.dst") < col("y.dst"))
+      .select(col("x.dst").as("doc_a"), col("y.dst").as("doc_b"))
+    val tri = wedges.join(pairs, Seq("doc_a", "doc_b"))
+      .agg(count(lit(1)).as("n_triangles"))
+    val ns = deg.agg(count(lit(1)).as("n_nodes"),
+      sum(expr("CAST(deg * (deg - 1) DIV 2 AS BIGINT)")).as("n_wedges"))
+    val es = pairs.agg(count(lit(1)).as("n_edges"))
+    // 1-row × 1-row crossJoins: broadcast-tiny by construction.
+    ns.crossJoin(broadcast(es)).crossJoin(broadcast(tri))
+      .select(col("n_nodes"), col("n_edges"), col("n_wedges"),
+        col("n_triangles"),
+        round(when(col("n_wedges") > 0,
+          lit(3.0) * col("n_triangles") / col("n_wedges"))
+          .otherwise(lit(0.0)), 6).as("gcc"))
+  }
+
+  /** [[distributedTriangleCensus]] on the driver, as one local row: the
+    * same degrees, the same (deg, id) orientation with ties to doc_a,
+    * the same closure of each out-neighbour wedge, a null `n_wedges` on
+    * an empty graph (a SUM over no rows) and `gcc` rounded HALF_UP to 6
+    * places as Spark's `round` does (through the same decimal string). */
+  private[graft] def localTriangleCensus(s: SparkSession,
+      pairs: Seq[(Long, Long)]): DataFrame = {
+    import scala.collection.mutable.{ArrayBuilder, LongMap}
+    val deg = LongMap.empty[Long]
+    for ((a, b) <- pairs) {
+      deg(a) = deg.getOrElse(a, 0L) + 1
+      deg(b) = deg.getOrElse(b, 0L) + 1
+    }
+    val out = LongMap.empty[ArrayBuilder.ofLong]   // src → its out-neighbours
+    val above = LongMap.empty[ArrayBuilder.ofLong] // doc_a → its doc_b's
+    for ((a, b) <- pairs) {
+      val (src, dst) = if (deg(a) <= deg(b)) (a, b) else (b, a)
+      out.getOrElseUpdate(src, new ArrayBuilder.ofLong) += dst
+      above.getOrElseUpdate(a, new ArrayBuilder.ofLong) += b
+    }
+    val closing = above.mapValuesNow { bl => val v = bl.result(); java.util.Arrays.sort(v); v }
+    var triangles = 0L
+    out.foreachValue { bl =>
+      val ds = bl.result()
+      java.util.Arrays.sort(ds)
+      for (i <- ds.indices; up <- closing.get(ds(i)); j <- i + 1 until ds.length)
+        if (java.util.Arrays.binarySearch(up, ds(j)) >= 0) triangles += 1
+    }
+    val wedges: java.lang.Long =
+      if (deg.isEmpty) null else deg.valuesIterator.map(d => d * (d - 1) / 2).sum
+    val gcc =
+      if (wedges != null && wedges > 0)
+        BigDecimal(3.0 * triangles / wedges.toDouble)
+          .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+      else 0.0
+    s.createDataFrame(java.util.List.of(Row(deg.size.toLong, pairs.size.toLong,
+      wedges, triangles, gcc)), triangleSchema)
+  }
 
   /** Sampled-shingle candidate pairs (hash ≡ 0 mod 8 keys, SkewGuard
     * cap 64) — shared by q_ngram_jaccard and q_containment_pairs. For
@@ -508,48 +616,19 @@ object DedupQueries extends QueryModule {
     // every other), a triangle-free chain is drift (a~b~c where a and
     // c share nothing — e.g. incremental edits), and the global
     // clustering coefficient summarizes which regime the corpus is in.
-    // Scale shape: edges are ORIENTED from the (degree, id)-smaller
-    // endpoint, so each triangle is generated exactly once and wedge
-    // fan-out is bounded by out-degrees of the min-degree orientation —
-    // the classic O(m^1.5) triangle-enumeration bound instead of
-    // max-degree² hub explosion. Wedge closure is a pure EQUI-join on
-    // the canonicalized (least, greatest) pair key; no OR-condition
-    // join (which would plan a BroadcastNestedLoop) exists.
+    // Scale shape: see [[distributedTriangleCensus]].
     "q_triangle_count" -> ((s, d) => {
       val base = StagedCache.persist(hashedShingles(s, d))
       val pairs = StagedCache.persist(
         minhashPairs(base).select(col("doc_a"), col("doc_b")))
-      val deg = StagedCache.persist(pairs
-        .select(explode(array(col("doc_a"), col("doc_b"))).as("v"))
-        .groupBy("v").agg(count(lit(1)).as("deg")))
-      // Staged: both wedge self-join sides read the oriented table
-      // (recomputing it re-runs the pairs⋈deg joins per side).
-      val oriented = StagedCache.persist(pairs
-        .join(deg.select(col("v").as("doc_a"), col("deg").as("da")), "doc_a")
-        .join(deg.select(col("v").as("doc_b"), col("deg").as("db")), "doc_b")
-        // Ties fall to doc_a: pairs are canonical doc_a < doc_b, so
-        // (deg, id) is a total order and each triangle has exactly ONE
-        // all-outgoing vertex.
-        .select(when(col("da") <= col("db"), col("doc_a")).otherwise(col("doc_b")).as("src"),
-          when(col("da") <= col("db"), col("doc_b")).otherwise(col("doc_a")).as("dst")))
-      // x.dst < y.dst in the join already canonicalizes the closing
-      // pair key (pairs are doc_a < doc_b) — no least/greatest needed.
-      val wedges = oriented.as("x")
-        .join(oriented.as("y"), col("x.src") === col("y.src")
-          && col("x.dst") < col("y.dst"))
-        .select(col("x.dst").as("doc_a"), col("y.dst").as("doc_b"))
-      val tri = wedges.join(pairs, Seq("doc_a", "doc_b"))
-        .agg(count(lit(1)).as("n_triangles"))
-      val ns = deg.agg(count(lit(1)).as("n_nodes"),
-        sum(expr("CAST(deg * (deg - 1) DIV 2 AS BIGINT)")).as("n_wedges"))
-      val es = pairs.agg(count(lit(1)).as("n_edges"))
-      // 1-row × 1-row crossJoins: broadcast-tiny by construction.
-      ns.crossJoin(broadcast(es)).crossJoin(broadcast(tri))
-        .select(col("n_nodes"), col("n_edges"), col("n_wedges"),
-          col("n_triangles"),
-          round(when(col("n_wedges") > 0,
-            lit(3.0) * col("n_triangles") / col("n_wedges"))
-            .otherwise(lit(0.0)), 6).as("gcc"))
+      // The ACTUAL row count decides, never an estimate: at or below
+      // the cap the staged edges come to the driver and the census
+      // runs there, saving the distributed census's chain of about 14
+      // sequential stage jobs over a graph of a few hundred edges.
+      val few = pairs.limit(TriangleLocalRows + 1).collect()
+      if (few.length <= TriangleLocalRows && !testDistributedCensus)
+        localTriangleCensus(s, few.map(r => (r.getLong(0), r.getLong(1))).toSeq)
+      else distributedTriangleCensus(pairs)
     }),
 
     // Edit-distance-verified near-dup: the SAME banded-LSH candidate

@@ -30,6 +30,17 @@ object StagedCache {
     val p = df.persist(); staged += ((p, b => p.unpersist(b))); p
   }
 
+  /** [[persist]], and build the cached blocks now, as one job. Under
+    * AQE every scan of a cached frame is its own cache stage, and AQE
+    * does not reuse them: a lazily staged frame scanned twice in one
+    * plan is built twice, by two concurrent jobs. A frame built here is
+    * already materialized for every plan that scans it. */
+  def persistBuilt(df: DataFrame): DataFrame = {
+    val p = persist(df)
+    org.apache.spark.sql.graftbridge.Bridge.buildCache(p)
+    p
+  }
+
   /** Persist AND truncate lineage — for driver-looped trainers whose
     * round-k state is built on round k−1's (BPE merges, Lloyd): a plain
     * [[persist]] caches the ROWS but the analyzed plan still nests the

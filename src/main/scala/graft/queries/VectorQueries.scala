@@ -269,8 +269,8 @@ object VectorQueries extends QueryModule {
     // assigns its rows through the K-centroid index it carries and
     // sums them per cell in place, and the K·dim partial sums merge
     // by tree reduce — independent of corpus size; the trained
-    // 16-row model is staged once and both final consumers
-    // (assignment report, checksum join) read it.
+    // 16-row model stays on the driver, and both final consumers
+    // (assignment report, checksum join) read it from there.
     "q_kmeans" -> ((s, d) => kmeansReport(s, d, iters = 3)),
 
     // Quantized ANN search — q_quantize_embed put to WORK, the SQ8
@@ -297,13 +297,13 @@ object VectorQueries extends QueryModule {
           x => abs(x.cast("double")))), lit(1e-30)))
         .withColumn("qv", transform(col("embedding"),
           x => round(x.cast("double") / col("scale") * 127).cast("tinyint")))
-      val trained = StagedCache.persist(trainCentroids(s, d, ivfLloydIters))
+      val model = trainCentroids(s, d, ivfLloydIters)
       val probes = assignNearest(e.filter(col("vec_id") % 25 === 0),
-          trained, keep = ivfNProbe)
+          model, keep = ivfNProbe)
         .select(col("cid").as("cell"), col("vec_id").as("probe_id"),
           col("embedding").as("pv"), col("nrm").as("pnrm"),
           col("scale").as("ps"), col("qv").as("pq"))
-      val cands = assignMin(e, trained)
+      val cands = assignMin(e, model)
         .select(col("cid").as("cell"), col("vec_id").as("cand_id"),
           col("embedding").as("cv"), col("nrm").as("cnrm"),
           col("scale").as("cs"), col("qv").as("cq"))
@@ -387,7 +387,8 @@ object VectorQueries extends QueryModule {
     // encode is a pure map over the corpus scan (CentroidIndex per
     // subspace, codegen'd, zero exchange).
     "q_ann_pq" -> ((s, d) => {
-      val books = trainPqBooks(s, embWithEu(s, d))
+      val books = trainPqBooks(s,
+        StagedCache.persist(embWithEu(s, d).select(col("vec_id"), col("e_u"))))
       val idxs = books.map(b => graft.functions.CentroidIndex.buildCached(b))
       def bookArr(m: Int) = typedlit((0L until pqK).map(c =>
         books(m).find(_._1 == c).map(_._2.toSeq).getOrElse(Seq.fill(pqSub)(0L))))
@@ -452,18 +453,22 @@ object VectorQueries extends QueryModule {
     // distance computation, ranked ascending. Shortlist + exact
     // cosine rerank exactly as q_ann_pq.
     "q_ann_ivfpq" -> ((s, d) => {
-      val trained = StagedCache.persist(trainCentroids(s, d, ivfLloydIters))
-      val cents = trained.select(col("cid").as("cell"),
-        col("c_u").as("cent_u"))
+      // One staged scan feeds training, assignment and the rerank.
       val e = StagedCache.persist(embWithEu(s, d)
         .withColumn("nrm", VectorFunctions.l2Norm(col("embedding"))))
+      val model = trainCentroidsOn(s, e, ivfLloydIters)
+      // Each cell's centroid from a plan literal indexed by cid: cids
+      // are seed vec_ids, 0 ≤ cid ≤ the model's last, and a cell that
+      // trained empty holds an empty array no vector is assigned to.
+      val byCid = model.map(m => m._1 -> m._2.toSeq).toMap
+      val centArr = typedlit((0L to model.last._1).map(byCid.getOrElse(_, Seq.empty[Long])))
+      def centOf(cell: String) = element_at(centArr, col(cell).cast("int") + 1)
       // Every vector's RESIDUAL against its own cell centroid — exact
       // integer subtraction, so the whole residual chain inherits the
       // micro-unit determinism.
       val assigned = StagedCache.persist(
-        assignMin(e, trained).withColumnRenamed("cid", "cell")
-          .join(broadcast(cents), "cell")
-          .withColumn("r_u", zip_with(col("e_u"), col("cent_u"),
+        assignMin(e, model).withColumnRenamed("cid", "cell")
+          .withColumn("r_u", zip_with(col("e_u"), centOf("cell"),
             (a, b) => a - b)))
       // Books train over the residual population (pooled across
       // cells — the standard IVF-PQ regime).
@@ -487,10 +492,9 @@ object VectorQueries extends QueryModule {
       // (pr2 + cw2 − 2·pr·cw) — so a candidate costs pqM lookups and
       // the summed table entries ARE ‖pr − q(r)‖², the paper's ADC.
       val probes0 = assignNearest(e.filter(col("vec_id") % 25 === 0),
-          trained, keep = ivfNProbe)
+          model, keep = ivfNProbe)
         .withColumnRenamed("cid", "cell")
-        .join(broadcast(cents), "cell")
-        .withColumn("pr_u", zip_with(col("e_u"), col("cent_u"),
+        .withColumn("pr_u", zip_with(col("e_u"), centOf("cell"),
           (a, b) => a - b))
       val probes = (0 until pqM).foldLeft(probes0) { (df, m) =>
           val su = slice(col("pr_u"), m * pqSub + 1, pqSub)
@@ -559,9 +563,9 @@ object VectorQueries extends QueryModule {
     "q_semdedup" -> ((s, d) => {
       val e = embWithEu(s, d)
         .withColumn("nrm", VectorFunctions.l2Norm(col("embedding")))
-      val trained = trainCentroids(s, d, ivfLloydIters)
+      val model = trainCentroids(s, d, ivfLloydIters)
       val cells = StagedCache.persist(SkewGuard.capBuckets(
-        assignMin(e, trained)
+        assignMin(e, model)
           .select(col("vec_id"), col("embedding"), col("nrm"),
             col("cid").as("cell")),
         "cell", col("vec_id"), semCellCap))
@@ -659,9 +663,9 @@ object VectorQueries extends QueryModule {
       // documented ANN recall trade lives in BOTH engines identically.
       val e = embWithEu(s, d)
         .withColumn("nrm", VectorFunctions.l2Norm(col("embedding")))
-      val (index, trained) = ensureIvfIndex(s, d, ivfLloydIters)
+      val (index, model) = ensureIvfIndex(s, d, ivfLloydIters)
       val probe = withPcell(assignNearest(e.filter(col("vec_id") === 42),
-          trained, keep = ivfNProbe)
+          model, keep = ivfNProbe)
         .select(col("cid").cast("int").as("cell"),
           col("embedding").as("pv"), col("nrm").as("pnrm")))
       val bySem = Window.orderBy(col("cos_sim").desc, col("doc_id"))
@@ -710,10 +714,11 @@ object VectorQueries extends QueryModule {
     * each on its own sub-slice. Training scans the full corpus: with
     * pqK fixed the per-iteration cost is pqK·n sub-dots — linear in the
     * corpus at any scale. Returns per subspace the (cid, codeword_u,
-    * c2u) rows. */
+    * c2u) rows. Every iteration re-scans `corpus`, so callers pass a
+    * staged frame; nothing is staged here. */
   private[graft] def trainPqBooks(s: SparkSession,
       corpus: DataFrame): Seq[Model] = {
-    val e = StagedCache.persist(corpus.select(col("vec_id"), col("e_u")))
+    val e = corpus.select(col("vec_id"), col("e_u"))
     val seed = collectVecs(e.filter(col("vec_id") < pqK))
     var books: Seq[Model] = (0 until pqM).map(m => seed.map { case (cid, eu) =>
       val cu = eu.slice(m * pqSub, (m + 1) * pqSub)
@@ -762,9 +767,9 @@ object VectorQueries extends QueryModule {
     * `row_number() OVER (ORDER BY dist_u, cid) <= keep` rows the
     * DuckDB oracles compute (exact top-m, same total order, ties
     * included). Output: e.*, dist_u, cid, rn (1-based). */
-  private def assignNearest(e: DataFrame, cent: DataFrame,
+  private def assignNearest(e: DataFrame, model: Model,
       keep: Int): DataFrame = {
-    val index = graft.functions.CentroidIndex.buildCached(collectModel(cent))
+    val index = graft.functions.CentroidIndex.buildCached(model)
     val base = e.columns.toSeq
     e.withColumn("_nk",
         graft.functions.CentroidIndex.nearestK(col("e_u"), col("n2u"),
@@ -791,11 +796,11 @@ object VectorQueries extends QueryModule {
     * rn=1 row of [[assignNearest]], which is what the DuckDB oracle
     * computes. Output: vec_id, dist_u, cid, payload.
     *
-    * Driver state: the K-row model collect — the same rows the old
-    * broadcast shipped through the driver anyway; K = n/2048 stays a
-    * model-artifact size (29 k rows ≈ 15 MB at 1000× sf0.1). */
-  private[graft] def assignMin(e: DataFrame, cent: DataFrame): DataFrame = {
-    val index = graft.functions.CentroidIndex.buildCached(collectModel(cent))
+    * Driver state: the K-row model the trainer already holds;
+    * K = n/2048 stays a model-artifact size (29 k rows ≈ 15 MB at
+    * 1000× sf0.1). */
+  private[graft] def assignMin(e: DataFrame, model: Model): DataFrame = {
+    val index = graft.functions.CentroidIndex.buildCached(model)
     val payload = e.columns.filterNot(_ == "vec_id").toSeq
     e.withColumn("_nc",
         graft.functions.CentroidIndex.nearest(col("e_u"), col("n2u"), index))
@@ -806,7 +811,8 @@ object VectorQueries extends QueryModule {
   /** A trained model: (cid, c_u, c2u) rows, cid-sorted. */
   private[graft] type Model = Seq[(Long, Array[Long], Long)]
 
-  /** The trained model rows (cid, c_u, c2u), driver-side and cid-sorted. */
+  /** A persisted model artifact's rows (cid, c_u, c2u), driver-side and
+    * cid-sorted. */
   private def collectModel(cent: DataFrame): Model =
     cent.select(col("cid"), col("c_u"), col("c2u")).collect().toSeq
       .map(r => (r.getLong(0), r.getSeq[Long](1).toArray, r.getLong(2)))
@@ -891,11 +897,12 @@ object VectorQueries extends QueryModule {
     * from the first-K seed, one [[lloydStep]] job per iteration over
     * the persisted training sample; the K-row model returns to the
     * driver in between, so no iteration plans over a lineage chain.
-    * Output (cid, c_u, csum, c2u) as a local DataFrame — all integer
-    * micro-units, bit-identical to the oracle's [[lloydIterSql]] chain.
-    * Shared by the k-means trainer, the IVF quantizer, and Recall. */
+    * Returns that driver-held [[Model]] — all integer micro-units,
+    * bit-identical to the oracle's [[lloydIterSql]] chain; a caller
+    * that needs rows wraps it with [[modelFrame]]. Shared by the
+    * k-means trainer, the IVF quantizer, and Recall. */
   private[graft] def trainCentroids(s: SparkSession, d: String,
-      iters: Int): DataFrame =
+      iters: Int): Model =
     trainCentroidsOn(s, embWithEu(s, d), iters)
 
   /** [[trainCentroids]] over an explicit corpus DataFrame (vec_id,
@@ -906,8 +913,7 @@ object VectorQueries extends QueryModule {
     * the base snapshot alone — what keeps an incrementally-refreshed
     * index's quantizer pinned and oracle-mirrorable. */
   private[graft] def trainCentroidsOn(s: SparkSession, corpus: DataFrame,
-      iters: Int): DataFrame = {
-    import s.implicits._
+      iters: Int): Model = {
     // An RDD count of the scan: one job, where Dataset.count's partial
     // aggregate and exchange are two under AQE.
     val n = corpus.select(col("vec_id")).queryExecution.toRdd.count()
@@ -929,6 +935,14 @@ object VectorQueries extends QueryModule {
     var model = collectVecs(e.filter(col("vec_id") < k))
       .map { case (cid, cu) => (cid, cu, sqNorm(cu)) }
     for (_ <- 1 to iters) model = lloydStep(tr, Seq(model)).head
+    model
+  }
+
+  /** A model as a local DataFrame (cid, c_u, csum, c2u), csum the
+    * integer centroid checksum: for the joins and artifact writes that
+    * need rows. */
+  private def modelFrame(s: SparkSession, model: Model): DataFrame = {
+    import s.implicits._
     model.map { case (cid, cu, c2u) => (cid, cu.toSeq, cu.sum, c2u) }
       .toDF("cid", "c_u", "csum", "c2u")
   }
@@ -939,13 +953,13 @@ object VectorQueries extends QueryModule {
     * units, a pure long sum. */
   private[graft] def kmeansReport(s: SparkSession, d: String,
       iters: Int): DataFrame = {
-    val trained = StagedCache.persist(trainCentroids(s, d, iters))
+    val model = trainCentroids(s, d, iters)
     assignMin(embWithEu(s, d)
-        .select(col("vec_id"), col("e_u"), col("n2u")), trained)
+        .select(col("vec_id"), col("e_u"), col("n2u")), model)
       .groupBy("cid")
       .agg(count(lit(1)).as("n"), sum(col("dist_u")).as("inertia_u"))
-      .join(broadcast(trained.select(col("cid"), col("csum").as("cent_sum_u"))),
-        "cid")
+      .join(broadcast(modelFrame(s, model)
+        .select(col("cid"), col("csum").as("cent_sum_u"))), "cid")
       .select(col("cid"), col("n"), col("inertia_u"), col("cent_sum_u"))
       .orderBy("cid")
   }
@@ -962,17 +976,15 @@ object VectorQueries extends QueryModule {
       lloydIters: Int): DataFrame = {
     val e = embWithEu(s, d)
       .withColumn("nrm", VectorFunctions.l2Norm(col("embedding")))
-    // The trained quantizer is staged: probe and candidate assignment
-    // both read it, and its lineage embeds the whole training job.
-    val trained = StagedCache.persist(trainCentroids(s, d, lloydIters))
+    val model = trainCentroids(s, d, lloydIters)
     // Probes (corpus/25) take their nprobe nearest cells through the
     // windowed form — a small batch; candidates (the WHOLE corpus) go
     // through the map-side-combined argmin, never a pair-row shuffle.
     val probesR = assignNearest(e.filter(col("vec_id") % 25 === 0),
-        trained, keep = nprobe)
+        model, keep = nprobe)
       .select(col("cid").as("cell"), col("vec_id").as("probe_id"),
         col("embedding").as("pv"), col("nrm").as("pnrm"))
-    val cands = assignMin(e, trained)
+    val cands = assignMin(e, model)
       .select(col("cid").as("cell"), col("vec_id").as("cand_id"),
         col("embedding").as("cv2"), col("nrm").as("cnrm"))
     topK(probesR.join(cands, "cell")
@@ -982,7 +994,7 @@ object VectorQueries extends QueryModule {
           / (col("pnrm") * col("cnrm")), 6).as("cos_sim")))
   }
 
-  /** The trained quantizer COLLECTED as a driver-side model artifact —
+  /** The trained quantizer as a driver-side model artifact —
     * (cid, c_u, c2u) rows, K = [[derivedK]] of them. This is the
     * model-refresh output the streaming ingest kernel
     * ([[graft.streaming.StreamingKernels.annAssign]]) embeds as a plan
@@ -990,18 +1002,15 @@ object VectorQueries extends QueryModule {
     * per decade (16 at the oracle SFs, 732 at 100× sf0.1). */
   private[graft] def trainedCentroidModel(s: SparkSession, d: String,
       iters: Int): Seq[(Long, Seq[Long], Long)] =
-    trainCentroids(s, d, iters)
-      .select(col("cid"), col("c_u"), col("c2u")).collect().toSeq
-      .map(r => (r.getLong(0), r.getSeq[Long](1), r.getLong(2)))
+    trainCentroids(s, d, iters).map { case (cid, cu, c2u) => (cid, cu.toSeq, c2u) }
 
   /** Batch twin of the streaming ANN-ingest assignment — every corpus
     * vector's (cid, dist_u) under the trained quantizer, row-level.
     * StreamingSpec pins the streaming kernel bit-identical to this. */
   private[graft] def batchAssign(s: SparkSession, d: String,
       iters: Int): DataFrame = {
-    val trained = StagedCache.persist(trainCentroids(s, d, iters))
     assignMin(embWithEu(s, d).select(col("vec_id"), col("e_u"),
-      col("n2u")), trained)
+      col("n2u")), trainCentroids(s, d, iters))
       .select(col("vec_id"), col("cid"), col("dist_u"))
   }
 
@@ -1031,9 +1040,9 @@ object VectorQueries extends QueryModule {
       nprobe: Int, lloydIters: Int): DataFrame = {
     val e = embWithEu(s, d)
       .withColumn("nrm", VectorFunctions.l2Norm(col("embedding")))
-    val (index, trained) = ensureIvfIndex(s, d, lloydIters)
+    val (index, model) = ensureIvfIndex(s, d, lloydIters)
     val probesR = withPcell(assignNearest(e.filter(col("vec_id") % 25 === 0),
-        trained, keep = nprobe)
+        model, keep = nprobe)
       .select(col("cid").cast("int").as("cell"),
         col("vec_id").as("probe_id"),
         col("embedding").as("pv"), col("nrm").as("pnrm")))
@@ -1074,21 +1083,16 @@ object VectorQueries extends QueryModule {
     * keeps a reused artifact bit-identical to a fresh build, so the
     * DuckDB oracle holds either way. */
   private def ensureIvfIndex(s: SparkSession, d: String,
-      lloydIters: Int): (DataFrame, DataFrame) = {
+      lloydIters: Int): (DataFrame, Model) = {
     val dir = graft.operators.AnnIndexStore.ensure(s, d, "ivf",
       s"iters=$lloydIters,dirs=$ivfMaxDirs,cell=$targetCell,v=1") { out =>
       val e = embWithEu(s, d)
         .withColumn("nrm", VectorFunctions.l2Norm(col("embedding")))
-      val trained = StagedCache.persist(trainCentroids(s, d, lloydIters))
-      trained.coalesce(1).write.parquet(s"$out/model")
-      assignMin(e, trained)
-        .select(col("vec_id").as("cand_id"), col("embedding").as("cv2"),
-          col("nrm").as("cnrm"), col("cid").cast("int").as("cell"))
-        .withColumn("pcell", pmod(col("cell"), lit(ivfMaxDirs)).cast("int"))
-        .repartition(col("pcell"))
-        .write.partitionBy("pcell").parquet(s"$out/postings")
+      val model = trainCentroids(s, d, lloydIters)
+      modelFrame(s, model).coalesce(1).write.parquet(s"$out/model")
+      writeIvfGeneration(e, model, out)
     }
-    (s.read.parquet(s"$dir/postings"), s.read.parquet(s"$dir/model"))
+    (s.read.parquet(s"$dir/postings"), collectModel(s.read.parquet(s"$dir/model")))
   }
 
   /** Add the probe-side pcell key matching [[persistedIvfIndex]]. */
@@ -1106,9 +1110,9 @@ object VectorQueries extends QueryModule {
     * layout as [[ensureIvfIndex]], so every generation of a chain
     * shares the directory shape and one multi-root scan partition-
     * prunes across all of them. */
-  private def writeIvfGeneration(e: DataFrame, trained: DataFrame,
+  private def writeIvfGeneration(e: DataFrame, model: Model,
       out: String): Unit =
-    assignMin(e, trained)
+    assignMin(e, model)
       .select(col("vec_id").as("cand_id"), col("embedding").as("cv2"),
         col("nrm").as("cnrm"), col("cid").cast("int").as("cell"))
       .withColumn("pcell", pmod(col("cell"), lit(ivfMaxDirs)).cast("int"))
@@ -1137,10 +1141,9 @@ object VectorQueries extends QueryModule {
       s"iters=$lloydIters,dirs=$ivfMaxDirs,cell=$targetCell,v=1") {
       (out, trainV) =>
         val corpus = corpusAt(Some(trainV))
-        val trained = StagedCache.persist(
-          trainCentroidsOn(s, corpus, lloydIters))
-        trained.coalesce(1).write.parquet(s"$out/model")
-        writeIvfGeneration(corpus, trained, out)
+        val model = trainCentroidsOn(s, corpus, lloydIters)
+        modelFrame(s, model).coalesce(1).write.parquet(s"$out/model")
+        writeIvfGeneration(corpus, model, out)
     } { (parent, out, fromV, toV) =>
       // The pinned quantizer: copied forward (K rows — model-artifact
       // sized) so every generation self-serves model + delta postings.
@@ -1148,7 +1151,7 @@ object VectorQueries extends QueryModule {
       model.coalesce(1).write.parquet(s"$out/model")
       val delta = withEu(TxnLog.readAppended(s, table, fromV, Some(toV)))
         .withColumn("nrm", VectorFunctions.l2Norm(col("embedding")))
-      writeIvfGeneration(delta, model, out)
+      writeIvfGeneration(delta, collectModel(model), out)
     }
     (chain, s.read.parquet(s"${chain.dir}/model"))
   }
@@ -1173,7 +1176,7 @@ object VectorQueries extends QueryModule {
     val e = withEu(TxnLog.read(s, table))
       .withColumn("nrm", VectorFunctions.l2Norm(col("embedding")))
     val probesR = withPcell(assignNearest(
-        e.filter(col("vec_id") % 25 === 0), trained, keep = nprobe)
+        e.filter(col("vec_id") % 25 === 0), collectModel(trained), keep = nprobe)
       .select(col("cid").cast("int").as("cell"),
         col("vec_id").as("probe_id"),
         col("embedding").as("pv"), col("nrm").as("pnrm")))

@@ -1,8 +1,10 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types.{LongType, StructType}
 
 /** Parquet source helpers over the driver's synthetic star schema
   * (see /root/repo/TESTDATA.md).
@@ -18,8 +20,38 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def apply(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** One table's scan. The schema comes from [[footerSchema]], so the
+    * read runs no Spark job; where that returns None, Spark infers it. */
+  def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    footerSchema(spark, path)
+      .fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
+  }
+
+  /** The schema `spark.read.parquet(path)` infers, read from one footer
+    * on the driver. Without `mergeSchema`, Spark's inference also reads
+    * one data file's footer, but as a Spark job
+    * (`mergeSchemasInParallel`), about one per table read. None where
+    * inference is more than one footer (schema merging on, partition
+    * subdirectories) or the path holds no data file; the caller then
+    * lets Spark infer, errors included. */
+  private[graft] def footerSchema(spark: SparkSession, path: String): Option[StructType] = {
+    if (spark.conf.get("spark.sql.parquet.mergeSchema", "false").toBoolean) return None
+    val p = new Path(path)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = p.getFileSystem(conf)
+    // Spark's listing skips these names (InMemoryFileIndex).
+    def hidden(n: String) = n.startsWith(".") || (n.startsWith("_") && !n.contains("="))
+    val files =
+      try {
+        val st = fs.getFileStatus(p)
+        if (st.isFile) Seq(st)
+        else fs.listStatus(p).toSeq.filterNot(f => hidden(f.getPath.getName))
+      } catch { case _: java.io.FileNotFoundException => Nil }
+    if (files.isEmpty || files.exists(_.isDirectory)) None
+    else Some(Bridge.parquetFooterSchema(spark,
+      files.minBy(_.getPath.getName).getPath, conf))
+  }
 
   def region(s: SparkSession, d: String): DataFrame    = apply(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = apply(s, d, "nation")

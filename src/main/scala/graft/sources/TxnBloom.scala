@@ -186,9 +186,11 @@ object TxnBloom {
 
   private def footerRows(conf: org.apache.hadoop.conf.Configuration,
       table: String, rel: String): Long = {
+    // HadoopReadOptions over the caller's conf, as in TxnLog.footerStats.
     val r = org.apache.parquet.hadoop.ParquetFileReader.open(
       org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        TxnLog.dataPathObj(table, rel), conf))
+        TxnLog.dataPathObj(table, rel), conf),
+      org.apache.parquet.HadoopReadOptions.builder(conf).build())
     try r.getRecordCount finally r.close()
   }
 

@@ -886,10 +886,12 @@ object TxnLog {
     import org.apache.parquet.hadoop.util.HadoopOutputFile
     val schema = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
       "message dv { required binary file (STRING); required int64 idx; }")
+    val conf = spark.sparkContext.hadoopConfiguration
     val out = HadoopOutputFile.fromPath(
-      new Path(s"$table/$sub", "part-00000.parquet"),
-      spark.sparkContext.hadoopConfiguration)
-    val w = ExampleParquetWriter.builder(out).withType(schema)
+      new Path(s"$table/$sub", "part-00000.parquet"), conf)
+    // withConf: the builder's default configuration is a fresh Hadoop
+    // Configuration, which re-parses core-default.xml on every write.
+    val w = ExampleParquetWriter.builder(out).withConf(conf).withType(schema)
       .withCompressionCodec(CompressionCodecName.SNAPPY).build()
     val rows = new SimpleGroupFactory(schema)
     try masks.toSeq.sortBy(_._1).foreach { case (p, bits) =>
@@ -2865,9 +2867,13 @@ object TxnLog {
       conf: org.apache.hadoop.conf.Configuration): FileStats = {
     import scala.jdk.CollectionConverters._
     {
+      // The caller's conf in the read options too: open(InputFile)
+      // alone builds a fresh Hadoop Configuration per file, which
+      // re-parses core-default.xml (about 6 ms an open).
       val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
         org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          dataPathObj(table, rel), conf))
+          dataPathObj(table, rel), conf),
+        org.apache.parquet.HadoopReadOptions.builder(conf).build())
       try {
         val blocks = reader.getFooter.getBlocks.asScala.toSeq
         val rows = blocks.map(_.getRowCount).sum
@@ -4568,9 +4574,11 @@ object TxnLog {
     * ordered newest first, the operational audit surface every
     * lakehouse exposes. */
   /** Live-file inventory of a snapshot — the DESCRIBE DETAIL shape:
-    * one row per live file with its size, log-carried row count and
-    * stat coverage, DV binding, and bloom sidecar coverage. Pure
-    * driver metadata (log replay + one file status per row); the SQL
+    * one row per live file with its size, log-carried (physical) row
+    * count and stat coverage, DV binding, the number of rows its
+    * deletion vector masks (`row_count - masked_rows` is the file's
+    * live count), and bloom sidecar coverage. Pure driver metadata (log
+    * replay + one file status per row + the cached masks); the SQL
     * face is the `table_files('<path>' [, version])` TVF. */
   def files(spark: SparkSession, table: String,
             version: Option[Long] = None): DataFrame = {
@@ -4583,16 +4591,24 @@ object TxnLog {
     // size probe past the crossover instead of one driver
     // getFileStatus per live file.
     val lens = probeLens(spark, table, full.map(_._1)).toMap
+    // None = a bound DV object is gone (vacuumed under a time-travel
+    // version): its files report -1 masked rows, as a missing file
+    // reports -1 bytes.
+    val masks =
+      try Some(fileMasks(spark, table, full))
+      catch { case scala.util.control.NonFatal(_) => None }
     val rows = full.map { case (rel, st) =>
       (rel,
         lens.getOrElse(rel, -1L),
         st.stats.map(_.count).getOrElse(-1L),
         st.stats.map(_.cols.size.toLong).getOrElse(0L),
         st.dv.orNull,
+        if (st.dv.isEmpty) 0L
+        else masks.fold(-1L)(_.get(rel).fold(0L)(_.getLongCardinality)),
         bloomCols.mkString(","))
     }
     rows.toDF("path", "size_bytes", "row_count", "n_stat_cols",
-      "dv_binding", "bloom_cols")
+      "dv_binding", "masked_rows", "bloom_cols")
   }
 
   /** FSCK REPAIR: drop log references to data files that are

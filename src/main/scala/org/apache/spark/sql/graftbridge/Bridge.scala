@@ -116,4 +116,43 @@ object Bridge {
     spark.internalCreateDataFrame(
       df.queryExecution.toRdd, df.schema, isStreaming = false)
   }
+
+  /** Wait until the listener bus has delivered every posted event
+    * (`listenerBus` is `private[spark]`): listener counts read after an
+    * action are otherwise racy. */
+  def drainListeners(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
+
+  /** The schema Spark's parquet inference resolves for one file, read
+    * from its footer on the driver: the same footer-to-schema step
+    * (`readSchemaFromFooter`, so a Spark-written schema string wins)
+    * and the same converter, configured from the session's SQL conf
+    * (`nanosAsLong`, `inferTimestampNTZ`, `binaryAsString`, …) — where
+    * `spark.read.parquet` runs a Spark job to read that footer. */
+  def parquetFooterSchema(spark: org.apache.spark.sql.SparkSession,
+                          file: org.apache.hadoop.fs.Path,
+                          conf: org.apache.hadoop.conf.Configuration)
+      : org.apache.spark.sql.types.StructType = {
+    import org.apache.parquet.format.converter.ParquetMetadataConverter
+    import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+    val r = ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, conf),
+      org.apache.parquet.HadoopReadOptions.builder(conf)
+        .withMetadataFilter(ParquetMetadataConverter.SKIP_ROW_GROUPS).build())
+    val footer = try r.getFooter finally r.close()
+    val sqlConf = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.conf
+    ParquetFileFormat.readSchemaFromFooter(new Footer(file, footer),
+      new ParquetToSparkSchemaConverter(sqlConf))
+  }
+
+  /** Build a persisted frame's cached blocks now, as one job over the
+    * cache's own RDD (the job an AQE cache stage runs); a no-op for a
+    * frame that is not persisted. */
+  def buildCache(df: org.apache.spark.sql.DataFrame): Unit = {
+    val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
+    ds.sparkSession.sharedState.cacheManager.lookupCachedData(ds)
+      .foreach(_.cachedRepresentation.cacheBuilder.cachedColumnBuffers.count())
+  }
 }

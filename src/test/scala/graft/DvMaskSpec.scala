@@ -159,8 +159,15 @@ class DvMaskSpec extends AnyFunSuite with SparkSpec {
     assert(!TxnLog.maskCached(t, dv1))
     val e = intercept[AnalysisException](TxnLog.read(dml, t, Some(1)).count())
     assert(e.getMessage.contains(dv1), e.getMessage)
-    // The tip is untouched.
+    // The file inventory still answers for v1: its DV-bound files
+    // report -1 masked rows (unknown), as a missing file reports -1 bytes.
+    val masked = TxnLog.files(dml, t, Some(1)).where(col("dv_binding").isNotNull)
+      .select("masked_rows").collect().map(_.getLong(0)).toSeq
+    assert(masked.nonEmpty && masked.forall(_ == -1L), masked)
+    // The tip is untouched, and its inventory counts its live rows.
     assert(ids(TxnLog.read(dml, t)) === dvIds)
+    assert(TxnLog.files(dml, t).selectExpr("sum(row_count - masked_rows)")
+      .head().getLong(0) === dvIds.size.toLong)
   }
 
   test("a table dropped and recreated at the same path sees no stale mask") {

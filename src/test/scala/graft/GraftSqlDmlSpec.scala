@@ -406,6 +406,15 @@ class GraftSqlDmlSpec extends AnyFunSuite with SparkSpec {
       .head().getLong(0) === 3L)
     assert(dml.sql(s"SELECT count(dv_binding) FROM table_files('$dir')")
       .head().getLong(0) === 1L)
+    // masked_rows is the mask's cardinality: 3 physical − 1 masked = 2
+    // live rows.
+    assert(dml.sql(s"SELECT sum(masked_rows) FROM table_files('$dir')")
+      .head().getLong(0) === 1L)
+    assert(dml.sql(
+      s"SELECT sum(row_count - masked_rows) FROM table_files('$dir')")
+      .head().getLong(0) === 2L)
+    assert(dml.sql(s"SELECT sum(masked_rows) FROM table_files('$dir', 0)")
+      .head().getLong(0) === 0L)
     assert(dml.sql(s"SELECT sum(row_count) FROM table_files('$dir', 0)")
       .head().getLong(0) === 2L) // v0: rows 1 and 2
     // Bad arity fails at analysis with the usage string.

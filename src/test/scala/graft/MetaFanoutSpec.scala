@@ -134,6 +134,28 @@ class MetaFanoutSpec extends AnyFunSuite with SparkSpec {
     fs.delete(p, true)
   }
 
+  test("a 64-file local write reads its footers on the driver: no extra job") {
+    import spark.implicits._
+    val df = (0L until 640L).map(i => (i, s"n$i")).toDF("id", "s").repartition(64)
+    def write(tag: String): Int = {
+      val t = root(s"wide_$tag")
+      val p = new Path(t)
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      if (fs.exists(p)) fs.delete(p, true)
+      try jobsDuring(TxnLog.create(spark, t, df)) finally fs.delete(p, true)
+    }
+    val serial = FanoutPin(distribute = false)(write("serial"))
+    // At about 6 ms a footer open (a fresh Hadoop Configuration per
+    // open) the 8-op sample projected past the crossover and the
+    // footers fanned out as one more job: serial + 1 before the open
+    // took the caller's conf. The route is measured, so a GC pause in
+    // the sample gets three tries, as above.
+    var seen = Seq.empty[Int]
+    val same = (1 to 3).exists { i => seen :+= write(s"adaptive$i"); seen.last == serial }
+    info(s"64-file create: $serial jobs serial, measured route ${seen.mkString(", ")}")
+    assert(same)
+  }
+
   test("a retired per-site fan-out key fails loudly, naming itself") {
     assert(MetaFanout.RetiredKeys.size === 12)
     MetaFanout.RetiredKeys.foreach { k =>

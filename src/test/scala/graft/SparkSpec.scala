@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.graftbridge.ListenerDrain
+import org.apache.spark.sql.graftbridge.Bridge
 import org.scalatest.{BeforeAndAfterAll, BeforeAndAfterEach}
 import org.scalatest.Suite
 
@@ -21,9 +21,9 @@ trait SparkSpec extends BeforeAndAfterAll with BeforeAndAfterEach { self: Suite 
     val l = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
     }
-    ListenerDrain(sc)
+    Bridge.drainListeners(sc)
     sc.addSparkListener(l)
-    try { body; ListenerDrain(sc) } finally sc.removeSparkListener(l)
+    try { body; Bridge.drainListeners(sc) } finally sc.removeSparkListener(l)
     n.get
   }
 

@@ -70,4 +70,15 @@ class TablesSpec extends AnyFunSuite with SparkSpec {
       assert(off == Seq(1700000000000000L, 1700000001000000L, 1700000002000000L))
     } finally spark.conf.set(key, prior)
   }
+
+  test("table reads take the schema from one footer, equal to Spark's, with no job") {
+    val dir = "/root/testdata/sf0.01"
+    assume(new java.io.File(s"$dir/events.parquet").exists())
+    for (t <- Tables.names) {
+      val path = s"$dir/$t.parquet"
+      // events.ts is TIMESTAMP(NANOS): a long under nanosAsLong.
+      assert(Tables.footerSchema(spark, path) === Some(spark.read.parquet(path).schema), t)
+      assert(jobsDuring(Tables(spark, dir, t).schema) === 0, t)
+    }
+  }
 }
